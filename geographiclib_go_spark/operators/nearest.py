@@ -10,9 +10,9 @@ join is a single map-only Arrow stage over the fact table.  No
 shuffle, no window, no driver loop; scales linearly with executors.
 
 Exactness: a chord-angle prefilter ranks dim rows per fact row on the
-unit sphere (geographic lat/lon -> 3-vectors, one N x M matmul), then
-the exact Karney inverse kernel runs only on candidates that could
-beat the kth chord candidate.  The candidate margin uses the bound
+unit sphere (geographic lat/lon -> 3-vectors, one N x M matmul); a dim
+row is a candidate only if it could beat the kth chord candidate.  The
+candidate margin (_chord_margin) uses the bound
   b * sigma12 <= s12 <= a * sigma12
 (geodesic arc on the auxiliary sphere, line.go:114 k2 range: the
 integrand sqrt(1 + k^2 sin^2 sigma) is within [1, a/b]), widened by a
@@ -20,6 +20,15 @@ safety factor for the (reduced-latitude vs geocentric) angle mismatch,
 and is verified against the exhaustive N x M kernel evaluation in
 tests/test_nearest.py.  For f = 0 the chord order IS the geodesic
 order and the margin collapses to ties-only.
+
+For k = 1 the join is two scalar columns with one UDF each, so
+Spark's column pruning acts as an output mask.  The nn_id UDF
+(nearest_id_kernel) takes a row's single candidate as proven by the
+bound (~93% of rows with the 12 default landmarks) and runs the exact
+inverse only on rows with two or more candidates, all of a batch's
+pairs in one call, then an argmin per row.  The s12 UDF runs one
+inverse per row, against the winner only; a plan that never reads
+s12 drops it, and the inverse with it.
 """
 
 from __future__ import annotations
@@ -50,6 +59,45 @@ def _unit_vectors(lat_deg: np.ndarray, lon_deg: np.ndarray) -> np.ndarray:
                     axis=-1)
 
 
+def _chord_margin(g: GeodesicModel):
+    """(ratio, pad): a dim row at chord angle ang can beat one at
+    chord angle t in geodesic distance only if ang <= t * ratio + pad
+    (b * ang < a * t, plus slack for the geographic-vs-auxiliary-sphere
+    angle difference, O(f) small)."""
+    f_abs = abs(g.f)
+    return (g.a / g.b) * (1.0 + 8.0 * f_abs) + 1e-12, 4.0 * f_abs + 1e-12
+
+
+def nearest_id_kernel(g: GeodesicModel, lat: np.ndarray, lon: np.ndarray,
+                      dim_ids: np.ndarray, dim_lat: np.ndarray,
+                      dim_lon: np.ndarray, dim_vec: np.ndarray) -> np.ndarray:
+    """k = 1, ids only: int64[n] id of the dim row at minimum exact
+    geodesic distance (the lowest dim index on exact ties), -1 where
+    lat/lon is NaN.  Equal to nearest_dim_kernel(..., k=1)[0][:, 0]."""
+    ratio, pad = _chord_margin(g)
+    cand = np.empty((lat.size, dim_ids.size), dtype=bool)
+    # sliced so the float temporaries stay cache-resident
+    for i in range(0, lat.size, CHUNK):
+        sl = slice(i, i + CHUNK)
+        ang = np.arccos(np.clip(_unit_vectors(lat[sl], lon[sl]) @ dim_vec.T,
+                                -1.0, 1.0))
+        # fmin skips NaN dim rows, as nearest_dim_kernel's partition does
+        cand[sl] = ang <= np.fmin.reduce(ang, axis=1)[:, None] * ratio + pad
+    n_cand = cand.sum(axis=1)
+    # a lone candidate is proven nearest: no other dim row is in the bound
+    out = np.where(n_cand > 0, dim_ids[cand.argmax(axis=1)], -1)
+    amb = np.flatnonzero(n_cand > 1)
+    if amb.size:
+        sub = cand[amb]
+        rows, cols = np.nonzero(sub)
+        s12 = np.full(sub.shape, np.inf)
+        s12[rows, cols] = kinverse(g, lat[amb[rows]], lon[amb[rows]],
+                                   dim_lat[cols], dim_lon[cols],
+                                   C.DISTANCE)["s12"]
+        out[amb] = dim_ids[s12.argmin(axis=1)]
+    return out
+
+
 def nearest_dim_kernel(g: GeodesicModel, lat: np.ndarray, lon: np.ndarray,
                        dim_ids: np.ndarray, dim_lat: np.ndarray,
                        dim_lon: np.ndarray, dim_vec: np.ndarray,
@@ -70,12 +118,7 @@ def nearest_dim_kernel(g: GeodesicModel, lat: np.ndarray, lon: np.ndarray,
     else:
         kth = ang.max(axis=1)
 
-    # margin: a dim row can beat the kth chord candidate in geodesic
-    # distance only if  b * ang_j < a * kth  (plus slack for the
-    # geographic-vs-auxiliary-sphere angle difference, O(f) small)
-    f_abs = abs(g.f)
-    ratio = (g.a / g.b) * (1.0 + 8.0 * f_abs) + 1e-12
-    pad = 4.0 * f_abs + 1e-12                        # radians of slack
+    ratio, pad = _chord_margin(g)
     cand = ang <= (kth[:, None] * ratio + pad)
 
     rows, cols = np.nonzero(cand)
@@ -99,49 +142,36 @@ def nearest_dim_kernel(g: GeodesicModel, lat: np.ndarray, lon: np.ndarray,
     return out_ids, out_s12
 
 
+def _dim_arrays(dim_rows):
+    """dim_rows: iterable of (id, lat, lon) -> (ids int64, lat, lon)."""
+    dim = list(dim_rows)
+    if not dim or len(dim) > MAX_DIM_ROWS:
+        raise ValueError(f"dim side must have 1..{MAX_DIM_ROWS} rows")
+    return (np.array([int(r[0]) for r in dim], dtype=np.int64),
+            np.array([float(r[1]) for r in dim]),
+            np.array([float(r[2]) for r in dim]))
+
+
 def make_nearest_dim_udf(dim_rows, k: int = 1,
                          a: float = WGS84_A, f: float = WGS84_F):
     """dim_rows: iterable of (id, lat, lon).  Returns a pandas UDF
     nearest(lat, lon):
-      k == 1 -> struct<nn_id long, nn_s12 double>  (pure columnar —
-               no per-row Python objects cross the Arrow boundary)
+      k == 1 -> nn_id long (nearest_id_kernel; the distance is the
+               separate make_nearest_s12_udf column)
       k > 1  -> struct<nn_ids array<long>, nn_s12 array<double>>
                (ascending distance)."""
-    dim = list(dim_rows)
-    if not dim or len(dim) > MAX_DIM_ROWS:
-        raise ValueError(f"dim side must have 1..{MAX_DIM_ROWS} rows")
-    dim_ids = np.array([int(r[0]) for r in dim], dtype=np.int64)
-    dim_lat = np.array([float(r[1]) for r in dim])
-    dim_lon = np.array([float(r[2]) for r in dim])
+    dim_ids, dim_lat, dim_lon = _dim_arrays(dim_rows)
     dim_vec = _unit_vectors(dim_lat, dim_lon)
     g = GeodesicModel(a, f)
 
     if k == 1:
-        schema1 = T.StructType([
-            T.StructField("nn_id", T.LongType(), False),
-            T.StructField("nn_s12", T.DoubleType(), False),
-        ])
+        @pandas_udf(T.LongType())
+        def nn_id(lat: pd.Series, lon: pd.Series) -> pd.Series:
+            return pd.Series(nearest_id_kernel(
+                g, lat.to_numpy(np.float64), lon.to_numpy(np.float64),
+                dim_ids, dim_lat, dim_lon, dim_vec))
 
-        @pandas_udf(schema1)
-        def nearest1(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-            la = lat.to_numpy(np.float64)
-            lo = lon.to_numpy(np.float64)
-            n = la.size
-            out_id = np.empty(n, dtype=np.int64)
-            out_s = np.empty(n)
-            # slice the Arrow batch so the kernel's temporaries stay
-            # cache-resident even with many concurrent workers
-            step = CHUNK
-            for lo_i in range(0, n, step):
-                sl = slice(lo_i, min(lo_i + step, n))
-                ids, s12 = nearest_dim_kernel(
-                    g, la[sl], lo[sl], dim_ids, dim_lat, dim_lon,
-                    dim_vec, 1)
-                out_id[sl] = ids[:, 0]
-                out_s[sl] = s12[:, 0]
-            return pd.DataFrame({"nn_id": out_id, "nn_s12": out_s})
-
-        return nearest1
+        return nn_id
 
     schema = T.StructType([
         T.StructField("nn_ids", T.ArrayType(T.LongType()), False),
@@ -157,6 +187,36 @@ def make_nearest_dim_udf(dim_rows, k: int = 1,
         return pd.DataFrame({"nn_ids": list(ids), "nn_s12": list(s12)})
 
     return nearest
+
+
+def make_nearest_s12_udf(dim_rows, a: float = WGS84_A, f: float = WGS84_F):
+    """Pandas UDF nn_s12(lat, lon, nn_id) -> double: the exact geodesic
+    distance to the dim row with that id, NaN where nn_id is not a dim
+    id (the -1 of a NaN row).  Ids must be unique, since the id is all
+    that names the winner."""
+    dim_ids, dim_lat, dim_lon = _dim_arrays(dim_rows)
+    if np.unique(dim_ids).size != dim_ids.size:
+        raise ValueError("dim ids must be unique for k=1 (s12 looks up "
+                         "the nearest dim row by its id)")
+    order = np.argsort(dim_ids)
+    sorted_ids = dim_ids[order]
+    g = GeodesicModel(a, f)
+
+    @pandas_udf(T.DoubleType())
+    def nn_s12(lat: pd.Series, lon: pd.Series,
+               nn_id: pd.Series) -> pd.Series:
+        ids = nn_id.to_numpy(np.int64)
+        pos = np.minimum(np.searchsorted(sorted_ids, ids),
+                         sorted_ids.size - 1)
+        hit = sorted_ids[pos] == ids
+        j = order[pos[hit]]
+        out = np.full(ids.size, np.nan)
+        out[hit] = kinverse(g, lat.to_numpy(np.float64)[hit],
+                            lon.to_numpy(np.float64)[hit],
+                            dim_lat[j], dim_lon[j], C.DISTANCE)["s12"]
+        return pd.Series(out)
+
+    return nn_s12
 
 
 def knn_points_topk(points: DataFrame, queries, k: int,
@@ -201,9 +261,7 @@ def knn_points_topk(points: DataFrame, queries, k: int,
     qlon = np.array([float(r[2]) for r in qrows])
     qvec = _unit_vectors(qlat, qlon)
     g = GeodesicModel(a, f)
-    f_abs = abs(f)
-    ratio = (g.a / g.b) * (1.0 + 8.0 * f_abs) + 1e-12
-    pad = 4.0 * f_abs + 1e-12
+    ratio, pad = _chord_margin(g)
     lat_col, lon_col = point_cols
 
     qkey = f"q_{id_col}"
@@ -294,9 +352,8 @@ def radius_dim_join(points: DataFrame, queries, radius_m: float,
     qlon = np.array([float(r[2]) for r in qrows])
     qvec = _unit_vectors(qlat, qlon)
     g = GeodesicModel(a, f)
-    f_abs = abs(f)
-    ang_max = (radius_m / g.b) * ((g.a / g.b) * (1 + 8 * f_abs)
-                                  + 1e-12) + 4 * f_abs + 1e-12
+    ratio, pad = _chord_margin(g)
+    ang_max = (radius_m / g.b) * ratio + pad
     lat_col, lon_col = point_cols
     qkey = f"q_{id_col}"
     out_schema = T.StructType(
@@ -341,8 +398,9 @@ def nearest_dim_join(big: DataFrame, dim, k: int = 1,
     """Annotate `big` with its k nearest dim rows (exact geodesic).
 
     dim: DataFrame with (id-like first column, lat, lon) OR an iterable
-    of (id, lat, lon) tuples.  k=1 adds scalar columns (nn_id, s12);
-    k>1 posexplodes to one output row per (big row, rank).
+    of (id, lat, lon) tuples.  k=1 adds scalar columns (nn_id, s12),
+    each from its own UDF, so a plan that never reads s12 never
+    computes it; k>1 posexplodes to one output row per (big row, rank).
     """
     if isinstance(dim, DataFrame):
         cols = dim.columns
@@ -350,12 +408,15 @@ def nearest_dim_join(big: DataFrame, dim, k: int = 1,
         # the exact 1..MAX_DIM_ROWS bound on whatever list arrives
         dim = [(r[cols[0]], r["lat"], r["lon"])
                for r in dim.limit(MAX_DIM_ROWS + 1).collect()]
+    else:
+        dim = list(dim)  # read twice for k=1
     udf = make_nearest_dim_udf(dim, k=k, a=a, f=f)
-    out = big.withColumn("_nn", udf(F.col(lat_col), F.col(lon_col)))
+    lat, lon = F.col(lat_col), F.col(lon_col)
     if k == 1:
-        return (out.withColumn(id_out, F.col("_nn.nn_id"))
-                .withColumn(s12_out, F.col("_nn.nn_s12"))
-                .drop("_nn"))
+        s12 = make_nearest_s12_udf(dim, a=a, f=f)
+        out = big.withColumn(id_out, udf(lat, lon))
+        return out.withColumn(s12_out, s12(lat, lon, F.col(id_out)))
+    out = big.withColumn("_nn", udf(lat, lon))
     zipped = F.arrays_zip(F.col("_nn.nn_ids").alias("i"),
                           F.col("_nn.nn_s12").alias("d"))
     out = out.select("*", F.posexplode(zipped).alias("_pos", "_pair"))

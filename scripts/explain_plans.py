@@ -47,10 +47,12 @@ def main():
     sections.append((
         "Flagship: tile + nearest-landmark join + rollup",
         "Everything before the final HashAggregate/Exchange pair is ONE "
-        "map-only stage (generate -> tile UDF -> nearest UDF): the join "
-        "itself introduces no Exchange — the dim table lives in the UDF "
-        "closure.  At 10^12 rows the only shuffle is the tiny per-tile "
-        "rollup.",
+        "map-only stage (generate -> one ArrowEvalPython with the tile "
+        "UDF and the nn_id UDF): the join itself introduces no Exchange "
+        "— the dim table lives in the UDF closure.  The rollup never "
+        "reads s12, so its UDF is pruned and the exact inverse runs "
+        "only on rows the chord bound leaves ambiguous.  At 10^12 rows "
+        "the only shuffle is the tiny per-tile rollup.",
         formatted(flag)))
 
     sections.append((

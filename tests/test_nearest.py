@@ -54,6 +54,96 @@ def test_kernel_matches_exhaustive(a, f, k):
     np.testing.assert_array_equal(ids, ids_x)
 
 
+@pytest.mark.parametrize("a,f", [
+    (WGS84_A, WGS84_F), (6400000.0, 0.0), (6400000.0, 0.2),
+    (6400000.0, -0.1),
+])
+def test_id_kernel_matches_exhaustive(a, f):
+    """The ids-only k=1 kernel decides most rows by the chord bound
+    alone; its nn_id must still be the exhaustive argmin bit for bit."""
+    g = GeodesicModel(a, f)
+    rng = np.random.default_rng(42)
+    n = 4000
+    lat = rng.uniform(-89.9, 89.9, n)
+    lon = rng.uniform(-180, 180, n)
+    dim = np.array(DEFAULT_LANDMARKS)
+    dim_ids = dim[:, 0].astype(np.int64)
+    dim_lat, dim_lon = dim[:, 1], dim[:, 2]
+    ids = nn.nearest_id_kernel(g, lat, lon, dim_ids, dim_lat, dim_lon,
+                               nn._unit_vectors(dim_lat, dim_lon))
+    ids_x, _ = _exhaustive(g, lat, lon, dim_ids, dim_lat, dim_lon, 1)
+    np.testing.assert_array_equal(ids, ids_x[:, 0])
+
+
+def _id_kernel_vs_exhaustive(g, dim, lat, lon):
+    dim_ids = np.array([d[0] for d in dim], dtype=np.int64)
+    dla = np.array([d[1] for d in dim])
+    dlo = np.array([d[2] for d in dim])
+    lat, lon = np.asarray(lat), np.asarray(lon)
+    ids = nn.nearest_id_kernel(g, lat, lon, dim_ids, dla, dlo,
+                               nn._unit_vectors(dla, dlo))
+    ids_x, _ = _exhaustive(g, lat, lon, dim_ids, dla, dlo, 1)
+    return ids, ids_x
+
+
+def test_id_kernel_chord_argmin_not_geodesic_winner():
+    """Points on a fat ellipsoid (f=0.2), found by random search, whose
+    nearest landmark by chord angle is NOT the geodesic nearest: the
+    bound must keep the true winner a candidate."""
+    g = GeodesicModel(6400000.0, 0.2)
+    lat = [-58.31711941565989, 7.454727400786695, 16.955145429905485,
+           -8.928981876458195]
+    lon = [149.80745158173795, 4.796561712967673, -3.973840391180204,
+           -83.3889257293423]
+    dim = np.array(DEFAULT_LANDMARKS)
+    ang = np.arccos(np.clip(
+        nn._unit_vectors(np.array(lat), np.array(lon))
+        @ nn._unit_vectors(dim[:, 1], dim[:, 2]).T, -1.0, 1.0))
+    ids, ids_x = _id_kernel_vs_exhaustive(g, DEFAULT_LANDMARKS, lat, lon)
+    assert (dim[ang.argmin(axis=1), 0] != ids_x[:, 0]).all()
+    np.testing.assert_array_equal(ids, ids_x[:, 0])
+
+
+def test_id_kernel_exact_ties_take_lowest_dim_index():
+    """Landmarks placed symmetrically about the query are at exactly the
+    same distance; the lower dim index wins (as the stable sort of the
+    k>1 kernel orders them), not the lower id."""
+    g = GeodesicModel(WGS84_A, WGS84_F)
+    dim = [(5, 0.0, 10.0), (3, 0.0, -10.0), (9, 10.0, 0.0),
+           (7, -10.0, 0.0), (8, 35.0, 45.0), (2, 35.0, 35.0)]
+    ids, ids_x = _id_kernel_vs_exhaustive(g, dim, [0.0, 30.0], [0.0, 40.0])
+    np.testing.assert_array_equal(ids, [9, 8])
+    np.testing.assert_array_equal(ids, ids_x[:, 0])
+    s = kinverse(g, np.array([0.0, 0.0, 30.0, 30.0]),
+                 np.array([0.0, 0.0, 40.0, 40.0]),
+                 np.array([10.0, -10.0, 35.0, 35.0]),
+                 np.array([0.0, 0.0, 45.0, 35.0]), C.DISTANCE)["s12"]
+    assert s[0] == s[1] and s[2] == s[3]  # the ties are exact
+
+
+def test_k1_udfs_nan_rows():
+    """NaN lat or lon: nn_id = -1 and s12 = NaN; other rows unaffected."""
+    import pandas as pd
+    lat = pd.Series([np.nan, 10.0, 51.5])
+    lon = pd.Series([0.0, np.nan, -0.1])
+    ids = nn.make_nearest_dim_udf(DEFAULT_LANDMARKS, k=1).func(lat, lon)
+    s12 = nn.make_nearest_s12_udf(DEFAULT_LANDMARKS).func(lat, lon, ids)
+    g = GeodesicModel(WGS84_A, WGS84_F)
+    dim = np.array(DEFAULT_LANDMARKS)
+    want_ids, want_s12 = nn.nearest_dim_kernel(
+        g, lat.to_numpy(), lon.to_numpy(), dim[:, 0].astype(np.int64),
+        dim[:, 1], dim[:, 2], nn._unit_vectors(dim[:, 1], dim[:, 2]), 1)
+    assert list(ids[:2]) == [-1, -1] and ids[2] >= 0
+    assert np.isnan(s12[:2]).all() and np.isfinite(s12[2])
+    np.testing.assert_array_equal(ids, want_ids[:, 0])
+    np.testing.assert_array_equal(s12, want_s12[:, 0])
+
+
+def test_k1_s12_needs_unique_dim_ids():
+    with pytest.raises(ValueError, match="unique"):
+        nn.make_nearest_s12_udf([(1, 0.0, 0.0), (1, 10.0, 10.0)])
+
+
 def test_kernel_near_tie_and_poles():
     """Antipodal / polar / near-tie placements exercise the margin."""
     g = GeodesicModel(WGS84_A, WGS84_F)
@@ -111,6 +201,31 @@ def test_spark_join_k1_matches_crossjoin(spark):
         nid, s = rows[r["pid"]]
         assert nid == r["qid"]
         assert s == r["d"]
+
+
+def test_flagship_plan_prunes_unread_s12(spark):
+    """The flagship aggregate reads only nn_id: its plan must hold ONE
+    Arrow UDF node (tiles + nn_id) and no s12 UDF.  A plan that selects
+    s12 must run the s12 UDF, still without a shuffle."""
+    from geographiclib_go_spark.operators import tiling
+
+    pts = (spark.range(200)
+           .select(F.col("id").alias("image_id"),
+                   ((F.col("id") * 37 % 1700) / 10.0 - 85.0).alias("lat"),
+                   ((F.col("id") * 91 % 3600) / 10.0 - 180.0).alias("lon")))
+    near = nn.nearest_dim_join(tiling.assign_tiles(pts, 6),
+                               DEFAULT_LANDMARKS, k=1)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    flag = plan(near.groupBy("tile_id", "nn_id").count())
+    assert flag.count("ArrowEvalPython") == 1
+    assert "nn_id(" in flag and "nn_s12(" not in flag
+
+    both = plan(near.select("image_id", "tile_id", "nn_id", "s12"))
+    assert "nn_s12(" in both
+    assert "Exchange" not in both
 
 
 def test_spark_join_k3_explodes_ranked(spark):

@@ -1,13 +1,16 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)  — flagship spatial pipeline on sf0.001.
-queries()     — one callable per implemented operator (SURVEY.md §2).
-oracle_sql()  — matching DuckDB SQL for EVERY registered query: the
+queries()     — one callable per key of queries.ORACLE_SQL, in that
+                dict's order.  ORACLE_SQL is the only place a query is
+                registered: a query without an oracle is not a query.
+oracle_sql()  — the DuckDB SQL for every registered query: the
                 sphere/relational/sketch paths are recomputed by
                 DuckDB directly; the WGS84 kernel paths hash against
                 kernel-precomputed fixture parquet
                 (scripts/build_fixtures.py); IVF re-derives its
-                seed-row centroids from the data.  Exactness is
+                seed-row centroids from the data.  tests/test_oracles.py
+                runs every query against its oracle; exactness is
                 additionally pytest-gated (GeodTest-style kernel
                 conformance, brute-force join oracles, LSH recall).
 """
@@ -33,153 +36,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering is deliberate: the driver caps CORRECTNESS at 50 rows per
-    # round, drawn in dict order.  r5 draw (first 50): the 4 queries whose
-    # newest official row is r2 (rotated past the cap in r4), the 9 r5
-    # additions/rewrites (emb_ivfpq256_topk and its two-stage re-rank
-    # twin plus the decode->embed->ANN bridge pair image_embed_knn /
-    # image_embed_ivf_knn are new; the three widened gates, the rewritten
-    # image_tile_rebalance, and the snapshot-materializing doc_pagerank
-    # need fresh rows), then 33 of the r3 greens, then the 4
-    # closing-session additions (BPE train/apply, sequence packing,
-    # LM scoring — no prior official row, so they take draw slots
-    # 47-50).  The 17 r3 greens pushed past the cap
-    # (ellip_route_nearest, route_distance, rollup/cube,
-    # pivot/unpivot, sphere_distance_buckets, tile_counts,
-    # tile_pyramid, events_props_sum, events_moving_window,
-    # track_bearing_rose, events_hourly, raster_coverage,
-    # region_dissolve, ellip/sphere_nearest_landmark) are each backed
-    # by an EXECUTABLE parity gate — tests/test_rotation_parity.py
-    # runs every out-of-draw rotation casualty against its ORACLE_SQL
-    # through DuckDB — not by a comment (ADVICE r4 item 1).  The 50
-    # r4 greens and the displaced four close the dict.
-    return {
-        # --- r5 draw: r2-evidence + new/changed — 11 ---
-        "doc_hll_registers": Q.doc_hll_registers,
-        "emb_cosine_topk": Q.emb_cosine_topk,
-        "sphere_polygon_area_dist": Q.sphere_polygon_area_dist,
-        "emb_similar_pairs": Q.emb_similar_pairs,
-        "emb_ivfpq256_topk": Q.emb_ivfpq256_topk,
-        "emb_ivfpq256_rerank_topk": Q.emb_ivfpq256_rerank_topk,
-        "image_quality_gate": Q.image_quality_gate,
-        "doc_lang_guess": Q.doc_lang_guess,
-        "doc_quality_buckets": Q.doc_quality_buckets,
-        "image_tile_rebalance": Q.image_tile_rebalance,
-        "doc_pagerank": Q.doc_pagerank,
-        "image_embed_knn": Q.image_embed_knn,
-        "image_embed_ivf_knn": Q.image_embed_ivf_knn,
-        # --- r5 draw: r3 greens — 37 ---
-        "q1_pricing_summary": Q.q1_pricing_summary,
-        "q3_top_revenue_orders": Q.q3_top_revenue_orders,
-        "q5_nation_volume": Q.q5_nation_volume,
-        "window_top_orders": Q.window_top_orders,
-        "grouping_sets_order_volume": Q.grouping_sets_order_volume,
-        "customers_without_orders": Q.customers_without_orders,
-        "supplier_balance_by_nation": Q.supplier_balance_by_nation,
-        "events_asof_view": Q.events_asof_view,
-        "events_sessionize": Q.events_sessionize,
-        "events_value_percentiles": Q.events_value_percentiles,
-        "events_value_sketch_quantiles": Q.events_value_sketch_quantiles,
-        "events_track_stats": Q.events_track_stats,
-        "events_interval_join": Q.events_interval_join,
-        "track_simplify": Q.track_simplify,
-        "track_map_match": Q.track_map_match,
-        "sql_distance_buckets": Q.sql_distance_buckets,
-        "sphere_radius_join": Q.sphere_radius_join,
-        "sphere_knn": Q.sphere_knn,
-        "pip_dateline_box": Q.pip_dateline_box,
-        "sphere_direct_destinations": Q.sphere_direct_destinations,
-        "sphere_arc_destinations": Q.sphere_arc_destinations,
-        "rhumb_distance_buckets": Q.rhumb_distance_buckets,
-        "rhumb_destinations": Q.rhumb_destinations,
-        "doc_heavy_hitters": Q.doc_heavy_hitters,
-        "lineitem_bloom_semi": Q.lineitem_bloom_semi,
-        "doc_tf_cosine_pairs": Q.doc_tf_cosine_pairs,
-        "track_lat_envelope": Q.track_lat_envelope,
-        "customer_moran": Q.customer_moran,
-        "customer_hilbert_locality": Q.customer_hilbert_locality,
-        "emb_kmeans": Q.emb_kmeans,
-        "tile_counts_salted": Q.tile_counts_salted,
-        "pts_geohash_rollup": Q.pts_geohash_rollup,
-        "pts_dbscan": Q.pts_dbscan,
-        # --- closing-session additions, swapped INTO the draw so the
-        # driver's r5 run gives them official rows (they had none);
-        # the four r3-green queries they displace (raster_coverage,
-        # region_dissolve, ellip_nearest_landmark,
-        # sphere_nearest_landmark) move past the cap and join the
-        # executable tests/test_rotation_parity.py gate ---
-        "doc_bpe_train": Q.doc_bpe_train,
-        "doc_seq_pack": Q.doc_seq_pack,
-        "doc_bpe_apply": Q.doc_bpe_apply,
-        "doc_lm_score": Q.doc_lm_score,
-        # --- out of draw: r3 greens, pytest-parity-backed — 13 ---
-        "route_distance": Q.route_distance,
-        "ellip_route_nearest": Q.ellip_route_nearest,
-        "events_hourly": Q.events_hourly,
-        "rollup_order_volume": Q.rollup_order_volume,
-        "cube_order_volume": Q.cube_order_volume,
-        "part_type_pivot": Q.part_type_pivot,
-        "part_type_unpivot": Q.part_type_unpivot,
-        "sphere_distance_buckets": Q.sphere_distance_buckets,
-        "tile_counts": Q.tile_counts,
-        "tile_pyramid": Q.tile_pyramid,
-        "events_props_sum": Q.events_props_sum,
-        "events_moving_window": Q.events_moving_window,
-        "track_bearing_rose": Q.track_bearing_rose,
-        # --- out of draw: r4 greens (r2-block members) — 14 ---
-        "sphere_gnomonic": Q.sphere_gnomonic,
-        "sphere_waypoints": Q.sphere_waypoints,
-        "sphere_polygon_area": Q.sphere_polygon_area,
-        "doc_dedup_summary": Q.doc_dedup_summary,
-        "doc_token_stats": Q.doc_token_stats,
-        "doc_bpe_tokens": Q.doc_bpe_tokens,
-        "docs_clean_pipeline": Q.docs_clean_pipeline,
-        "doc_hll_distinct": Q.doc_hll_distinct,
-        "doc_minhash_pairs": Q.doc_minhash_pairs,
-        "doc_simhash_pairs": Q.doc_simhash_pairs,
-        "doc_fingerprints": Q.doc_fingerprints,
-        "audio_features": Q.audio_features,
-        "video_motion": Q.video_motion,
-        "emb_near_dup_pairs": Q.emb_near_dup_pairs,
-        # --- out of draw: r4 greens — 31 ---
-        "route_crossings": Q.route_crossings,
-        "ellip_route_crossings": Q.ellip_route_crossings,
-        "docs_incremental_dedup": Q.docs_incremental_dedup,
-        "doc_simhash_pairs_h3": Q.doc_simhash_pairs_h3,
-        "doc_train_val_split": Q.doc_train_val_split,
-        "doc_stratified_sample": Q.doc_stratified_sample,
-        "image_phash_dedup": Q.image_phash_dedup,
-        "image_phash_near_dup": Q.image_phash_near_dup,
-        "image_dup_components": Q.image_dup_components,
-        "images_clean_pipeline": Q.images_clean_pipeline,
-        "doc_dup_clusters": Q.doc_dup_clusters,
-        "image_row_invariants": Q.image_row_invariants,
-        "emb_ivf_topk": Q.emb_ivf_topk,
-        "emb_ivfpq_topk": Q.emb_ivfpq_topk,
-        "tile_image_brightness": Q.tile_image_brightness,
-        "image_zonal_stats": Q.image_zonal_stats,
-        "zone_caption_stats": Q.zone_caption_stats,
-        "doc_ngram_jaccard_pairs": Q.doc_ngram_jaccard_pairs,
-        "image_resize_stats": Q.image_resize_stats,
-        "video_frame_sample": Q.video_frame_sample,
-        "route_corridor_images": Q.route_corridor_images,
-        "doc_decontaminate": Q.doc_decontaminate,
-        "doc_repetition_filter": Q.doc_repetition_filter,
-        "doc_substring_dedup": Q.doc_substring_dedup,
-        "doc_domain_mix": Q.doc_domain_mix,
-        "doc_bm25_topk": Q.doc_bm25_topk,
-        "image_caption_conflict": Q.image_caption_conflict,
-        "doc_regex_scrub": Q.doc_regex_scrub,
-        "emb_quality_gate": Q.emb_quality_gate,
-        "image_near_dup_keep_best": Q.image_near_dup_keep_best,
-        "image_augment_flip": Q.image_augment_flip,
-        # --- displaced by the closing-session additions above; r3
-        # official rows + the executable rotation-parity gate ---
-        "raster_coverage": Q.raster_coverage,
-        "region_dissolve": Q.region_dissolve,
-        "ellip_nearest_landmark": Q.ellip_nearest_landmark,
-        "sphere_nearest_landmark": Q.sphere_nearest_landmark,
-    }
+    return {name: getattr(Q, name) for name in Q.ORACLE_SQL}
+
 
 def oracle_sql() -> dict[str, str]:
     return dict(Q.ORACLE_SQL)

@@ -1,4 +1,4 @@
-"""Engine benchmark: headline queries + the flagship images pipeline.
+"""Engine benchmark: every registered query + the flagship images pipeline.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
@@ -26,11 +26,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def run_bench(sf_dir: str = None, cpus: str = None,
               n_images: int = None) -> dict:
+    import __spark_entry__ as entry
     from geographiclib_go_spark.session import build_session
-    from geographiclib_go_spark import queries as Q
     from geographiclib_go_spark.sources import images as im
     from geographiclib_go_spark.operators import tiling
-    from geographiclib_go_spark.operators import spatial_join as sj
     from geographiclib_go_spark.plans import pipeline as pl
     from pyspark.sql import functions as F
 
@@ -89,51 +88,8 @@ def run_bench(sf_dir: str = None, cpus: str = None,
     spark.range(0, 3200, 1, 32).select(
         F.sum(_warm(F.col("id").cast("double")))).collect()
 
-    headline = [
-        "q1_pricing_summary", "q3_top_revenue_orders", "q5_nation_volume",
-        "window_top_orders", "rollup_order_volume", "events_hourly",
-        "events_asof_view", "events_sessionize", "events_track_stats",
-        "events_interval_join", "events_value_sketch_quantiles",
-        "track_simplify", "track_map_match", "track_lat_envelope",
-        "sphere_distance_buckets", "sql_distance_buckets", "sphere_radius_join", "sphere_knn",
-        "pip_dateline_box", "sphere_direct_destinations",
-        "rhumb_distance_buckets", "rhumb_destinations",
-        "ellip_nearest_landmark", "sphere_nearest_landmark",
-        "route_distance", "ellip_route_nearest",
-        "route_crossings", "ellip_route_crossings",
-        "route_corridor_images",
-        "sphere_polygon_area", "tile_counts", "tile_pyramid",
-        "raster_coverage", "region_dissolve",
-        "doc_token_stats", "doc_bpe_tokens", "doc_hll_distinct",
-        "doc_heavy_hitters", "lineitem_bloom_semi",
-        "doc_tf_cosine_pairs", "customer_moran",
-        "customer_hilbert_locality",
-        "docs_clean_pipeline", "docs_incremental_dedup",
-        "doc_minhash_pairs",
-        "doc_simhash_pairs", "doc_simhash_pairs_h3",
-        "doc_ngram_jaccard_pairs",
-        "emb_cosine_topk", "emb_near_dup_pairs", "emb_ivf_topk",
-        "emb_ivfpq_topk", "emb_ivfpq256_topk",
-        "emb_ivfpq256_rerank_topk", "emb_kmeans",
-        "audio_features", "video_motion", "video_frame_sample",
-        "image_resize_stats",
-        "image_phash_dedup", "image_phash_near_dup", "image_row_invariants",
-        "tile_image_brightness", "image_zonal_stats",
-        "zone_caption_stats",
-        "image_dup_components", "images_clean_pipeline",
-        "doc_dup_clusters", "doc_train_val_split",
-        "doc_stratified_sample", "pts_geohash_rollup", "pts_dbscan",
-        "doc_decontaminate", "doc_repetition_filter",
-        "doc_substring_dedup", "doc_domain_mix", "doc_bm25_topk",
-        "doc_regex_scrub", "emb_quality_gate", "doc_pagerank",
-        "image_caption_conflict", "image_tile_rebalance",
-        "image_near_dup_keep_best", "image_augment_flip",
-        "image_quality_gate", "image_embed_knn",
-        "image_embed_ivf_knn", "doc_bpe_train", "doc_seq_pack",
-        "doc_bpe_apply", "doc_lm_score",
-    ]
-    for name in headline:
-        fn = getattr(Q, name)
+    registry = entry.queries()
+    for name, fn in registry.items():
         timed(name, lambda f=fn: f(spark, sf_dir)
               .write.format("noop").mode("overwrite").save())
 
@@ -188,7 +144,7 @@ def run_bench(sf_dir: str = None, cpus: str = None,
     total = round(sum(timings.values()), 3)
     result = {
         "metric": ("headline suite wall time (images tiled+joined "
-                   f"pipeline + {len(headline)} queries, "
+                   f"pipeline + {len(registry)} queries, "
                    f"best-of-{reps} each)"),
         "value": total,
         "unit": "sec",

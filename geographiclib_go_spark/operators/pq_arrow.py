@@ -1,16 +1,12 @@
 """IVF-PQ at REALISTIC parameters (ksub=256, m=16 in the registered
-query's shape, k-means-trained
-codebooks) — the scale path VERDICT r4 asked for to replace the
-literal-expression toy quantizer in operators/pq.py.
+query's shape, k-means-trained codebooks).
 
-Why a second implementation: pq.py inlines its codebooks as Catalyst
-literal expressions, which is elegant (whole-stage codegen, DuckDB
-replay) but the per-row cost and codegen size grow O(m*ksub) — fine
-at ksub=16, hopeless at the FAISS-standard ksub=256.  Here the
-codebooks live as numpy arrays shipped once into Arrow-batched
-kernels (mapInPandas over the task-broadcast closure — the
-standard Spark mechanism for sub-megabyte read-only state;
-16x256x4 int64 = 128 KB):
+Codebooks inlined as Catalyst literal expressions would cost O(m*ksub)
+per row and in codegen size — fine at ksub=16, hopeless at the
+FAISS-standard ksub=256.  Here the codebooks live as numpy arrays
+shipped once into Arrow-batched kernels (mapInPandas over the
+task-broadcast closure — the standard Spark mechanism for
+sub-megabyte read-only state; 16x256x4 int64 = 128 KB):
 
 - **train** (train_codebooks_kmeans): per-subspace Lloyd k-means in
   exact int64 arithmetic (floor-div centroid updates, argmin ties to

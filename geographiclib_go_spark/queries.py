@@ -2484,38 +2484,6 @@ def emb_ivf_topk(spark, sf_dir):
             .orderBy("qid", "vec_id"))
 
 
-_PQ = dict(m=4, ksub=16, dim=64, n_cells=8, nprobe=2, k=5, n_queries=8)
-
-
-def emb_ivfpq_topk(spark, sf_dir):
-    """IVF-PQ approximate ANN (operators/pq.py): the corpus lives as
-    4 sub-space code ids + a coarse cell (the FAISS IndexIVFPQ
-    memory shape), queries probe their 2 nearest coarse cells and
-    score candidates by ADC lookup tables — everything past the 1e-6
-    quantization is exact BIGINT, so codebook derivation, encoding,
-    coarse pruning, and the ADC ranking all replay hash-identically
-    in DuckDB.  The encoded index is the write-once artifact:
-    snapshotted via plans/lineage PARTITIONED BY cell, so a probe
-    against the committed snapshot is a partition-pruned read that
-    never touches raw vectors.  Recall vs the exact integer-L2
-    brute force is measured in tests/test_pq.py."""
-    from geographiclib_go_spark.operators import pq
-    from geographiclib_go_spark.plans import lineage as lin
-    emb = _t(spark, sf_dir, "embeddings")
-    vecs = pq.quantized(emb)
-    books = pq.train_codebooks(vecs, _PQ["m"], _PQ["ksub"], _PQ["dim"])
-    seeds = pq.coarse_seeds(vecs, _PQ["n_cells"], _PQ["dim"])
-    fp = f"{os.path.abspath(sf_dir)}|ivfpq_m4k16c8"
-    encoded = lin.run_stage(
-        spark, _dedup_store_root(), "ivfpq_index_embeddings",
-        lambda: pq.ivfpq_encode(vecs, books, seeds, _PQ["dim"]),
-        input_fingerprint=fp, partition_by=["cell"])
-    queries = vecs.filter(F.col("vid") < _PQ["n_queries"])
-    return pq.ivfpq_topk(encoded, queries, books, seeds,
-                         _PQ["dim"], _PQ["k"], _PQ["nprobe"]) \
-        .orderBy("qid", "rank")
-
-
 # m=16 over dim 64 is the FAISS-standard 4-dim-subspace shape
 # (16 bytes/vector = 32x compression).  Measured mean recall@10 vs
 # the exact integer-L2 brute force on this corpus: 0.41 (m=8), 0.61
@@ -4054,16 +4022,6 @@ ORACLE_SQL["emb_ivf_topk"] = """
     ORDER BY qid, vec_id
 """.format(seeds=", ".join(str(s) for s in _IVF_SEEDS))
 
-
-def _build_pq_oracle():
-    from geographiclib_go_spark.operators import pq
-    return pq.pq_oracle_sql(
-        m=_PQ["m"], ksub=_PQ["ksub"], dim=_PQ["dim"],
-        n_cells=_PQ["n_cells"], nprobe=_PQ["nprobe"], k=_PQ["k"],
-        n_queries=_PQ["n_queries"])
-
-
-ORACLE_SQL["emb_ivfpq_topk"] = _build_pq_oracle()
 
 # --------------------------------------------------------------------------
 # WGS84 fixture oracles: DuckDB cannot express the Karney kernel, so

@@ -453,48 +453,6 @@ def streaming_corridor_events(image_stream: DataFrame,
             .select(F.col(id_col), "seg", "dist_r"))
 
 
-def streaming_pq_near_dup_events(vec_stream: DataFrame,
-                                 encoded: DataFrame,
-                                 books, seeds, dim: int,
-                                 max_adc: int,
-                                 nprobe: int = 2,
-                                 vec_col: str = "embedding",
-                                 id_col: str = "vec_id") -> DataFrame:
-    """Streaming ingest-time embedding near-duplicate gate against
-    the PERSISTED IVF-PQ index (operators/pq.py): every arriving
-    vector quantizes, computes its ADC lookup tables, explodes to
-    its nprobe nearest coarse cells, and stream-static-joins the
-    committed code table — emitting one event per corpus vector whose
-    asymmetric distance is <= max_adc.  Threshold semantics (not
-    top-k) keep the query append-safe and stateless: no window, no
-    streaming state, the corpus is never re-read beyond the pruned
-    code partitions.  Emits (qid, vec_id, adc); parity with the batch
-    ADC filter is pytest-gated."""
-    from geographiclib_go_spark.operators import pq
-
-    vecs = pq.quantized(vec_stream, vec_col=vec_col, id_col=id_col)
-    m = len(books)
-    sub = dim // m
-    cells = F.slice(F.array_sort(F.array(*[
-        F.struct(pq._int_l2(F.col("q"), pq._lit_vec(s)).alias("d"),
-                 F.lit(ci).cast("int").alias("cell"))
-        for ci, s in enumerate(seeds)])), 1, nprobe)
-    # LUTs + probe cells in ONE projection of the arriving row — a
-    # rejoin on qid would be a stream-stream self-join
-    q = (vecs.select(
-            F.col("vid").alias("qid"),
-            *[F.array(*[pq._int_l2(pq._sub(F.col("q"), j, sub),
-                                   pq._lit_vec(c))
-                        for c in books[j]]).alias(f"lut{j}")
-              for j in range(m)],
-            F.explode(F.transform(
-                cells, lambda s: s.getField("cell"))).alias("cell")))
-    j = q.join(encoded, "cell")
-    return (j.select("qid", F.col("vid").alias("vec_id"),
-                     pq._adc(m).alias("adc"))
-            .filter(F.col("adc") <= max_adc))
-
-
 def streaming_pq256_near_dup_events(vec_stream: DataFrame,
                                     encoded: DataFrame,
                                     books, seeds,
@@ -661,7 +619,7 @@ def streaming_image_embed_events(image_stream: DataFrame,
     Emits (image_id, matched_id, ssd) for every candidate within
     exact integer squared-L2 max_ssd — a THRESHOLD, not a top-k,
     because a top-k over an append stream is not append-safe while a
-    threshold is (the streaming_pq_near_dup_events contract).
+    threshold is (the streaming_pq256_near_dup_events contract).
     Absence of an event means the image is embedding-novel; that
     fold belongs to the consumer.  Batch parity and an independent
     numpy replay are pytest-gated."""

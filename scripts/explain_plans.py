@@ -276,19 +276,6 @@ def main():
         formatted(Q.emb_kmeans(spark, sf))))
 
     sections.append((
-        "emb_ivfpq_topk (IVF-PQ ADC probe over the persisted code table)",
-        "The probe side is entirely broadcast: queries carry their "
-        "M x ksub integer ADC lookup tables as literal-free JVM "
-        "columns, explode to nprobe coarse cells, and BroadcastHashJoin "
-        "the cell-partitioned code snapshot — per candidate the score "
-        "is 4 element_at lookups + 3 adds inside WholeStageCodegen, no "
-        "Python anywhere, and the only Exchange is the per-query top-k "
-        "window.  Against a cell-partitioned snapshot the cell join is "
-        "a partition-pruned scan of the compressed (4 ints/vector) "
-        "index — raw vectors are never read at probe time.",
-        formatted(Q.emb_ivfpq_topk(spark, sf))))
-
-    sections.append((
         "image_zonal_stats (vector zones x decoded raster)",
         "Generate -> cell encode -> BroadcastHashJoin against the "
         "tiny zone cell cover -> ray-cast PIP refine (ArrowEvalPython "

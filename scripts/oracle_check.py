@@ -2,7 +2,12 @@
 at a given sf dir and compare with oracle_sql() through DuckDB —
 row count, column names, and order-insensitive values.
 
-Usage: python scripts/oracle_check.py [sf_dir]
+The comparison helpers here (TABLES, norm_cell, canon, duck_views,
+mismatch) are also what tests/test_oracles.py gates every registered
+query with, so the script and Tier-1 apply one rule.
+
+Usage: python scripts/oracle_check.py [sf_dir] [name1,name2,...]
+Exits 1 if any query mismatches or errors.
 """
 
 from __future__ import annotations
@@ -35,11 +40,35 @@ def norm_cell(v):
 
 
 def canon(pdf: pd.DataFrame) -> list:
+    """Column-sorted, order-insensitive rows of normalised cells."""
     cols = sorted(pdf.columns)
-    rows = []
-    for _, r in pdf[cols].iterrows():
-        rows.append(tuple(norm_cell(r[c]) for c in cols))
-    return sorted(rows)
+    return sorted(tuple(norm_cell(r[c]) for c in cols)
+                  for _, r in pdf[cols].iterrows())
+
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per sf-dir parquet table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def mismatch(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
+    """None when Spark's frame equals the oracle's — same column set,
+    same row count, same canon() values — else what differs."""
+    if sorted(got.columns) != sorted(want.columns):
+        return (f"spark cols {sorted(got.columns)} != "
+                f"duckdb cols {sorted(want.columns)}")
+    if len(got) != len(want):
+        return f"rows spark {len(got)} != duckdb {len(want)}"
+    a, b = canon(got), canon(want)
+    if a == b:
+        return None
+    diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+    return "values differ:" + "".join(
+        f"\n    spark : {x}\n    duckdb: {y}" for x, y in diffs)
 
 
 def main():
@@ -49,61 +78,37 @@ def main():
 
     spark = build_session(app="oracle-check", master="local[8]",
                           shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
 
     qs = ent.queries()
     if len(sys.argv) > 2:  # optional name filter
         want = set(sys.argv[2].split(","))
         qs = {k: v for k, v in qs.items() if k in want}
     oracles = ent.oracle_sql()
-    results = {}
+    bad = []
     for name, fn in qs.items():
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:
-            results[name] = f"SPARK ERROR: {e}"
-            print(f"{name:32s} SPARK ERROR: {e}")
-            continue
-        finally:
-            # queries cache() intra-query intermediates; don't let 83
-            # entries' caches pile up in the one local-mode JVM
-            spark.catalog.clearCache()
-        wall = time.time() - t0
-        if name not in oracles:
-            results[name] = f"rows-only: {len(sdf)} rows ({wall:.1f}s)"
-            print(f"{name:32s} rows-only  {len(sdf):7d} rows  {wall:5.1f}s")
-            continue
-        try:
+            wall = time.time() - t0
             odf = con.sql(oracles[name]).df()
         except Exception as e:
-            results[name] = f"ORACLE ERROR: {e}"
-            print(f"{name:32s} ORACLE ERROR: {e}")
+            bad.append(name)
+            print(f"{name:32s} ERROR: {type(e).__name__}: {e}")
             continue
-        ok_cols = sorted(sdf.columns) == sorted(odf.columns)
-        ok_rows = len(sdf) == len(odf)
-        ok_vals = ok_cols and ok_rows and canon(sdf) == canon(odf)
-        status = "OK" if ok_vals else "MISMATCH"
-        results[name] = status
-        print(f"{name:32s} {status:9s} rows {len(sdf)}/{len(odf)} "
-              f"cols={ok_cols}  {wall:5.1f}s")
-        if not ok_vals and ok_cols and ok_rows:
-            a, b = canon(sdf), canon(odf)
-            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            for x, y in diffs:
-                print(f"    spark : {x}")
-                print(f"    duckdb: {y}")
-        elif not ok_cols:
-            print(f"    spark cols : {sorted(sdf.columns)}")
-            print(f"    duckdb cols: {sorted(odf.columns)}")
+        finally:
+            # queries cache() intra-query intermediates; don't let the
+            # whole registry's caches pile up in the one local-mode JVM
+            spark.catalog.clearCache()
+        problem = mismatch(sdf, odf)
+        if problem:
+            bad.append(name)
+        print(f"{name:32s} {'MISMATCH' if problem else 'OK':9s} "
+              f"rows {len(sdf)}/{len(odf)}  {wall:5.1f}s")
+        if problem:
+            print(f"    {problem}")
 
-    bad = [k for k, v in results.items() if v == "MISMATCH"
-           or "ERROR" in str(v)]
-    print(f"\n{len(results) - len(bad)}/{len(results)} clean; "
-          f"problems: {bad}")
+    print(f"\n{len(qs) - len(bad)}/{len(qs)} clean; problems: {bad}")
     spark.stop()
     return 1 if bad else 0
 

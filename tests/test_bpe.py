@@ -3,9 +3,7 @@
 Three-way gate: the Spark trainer, its DuckDB ORACLE_SQL replay, and
 an independent pure-Python reference trainer must produce the exact
 same merge sequence (round, a, b, merged, cnt) on the sf0.001
-documents corpus.  doc_bpe_train sits past the driver's 50-row
-CORRECTNESS draw, so this test IS its executable verification (the
-same protocol as tests/test_rotation_parity.py).
+documents corpus.
 """
 
 import collections

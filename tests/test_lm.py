@@ -1,8 +1,6 @@
 """Bigram-LM scoring (operators/lm.py).
 
-doc_lm_score sits past the driver's 50-row CORRECTNESS draw, so the
-spark-vs-ORACLE_SQL-vs-pure-Python parity here is its executable
-verification (the tests/test_rotation_parity.py protocol).
+Spark vs ORACLE_SQL vs an independent pure-Python scorer.
 """
 
 import collections

@@ -283,9 +283,9 @@ def test_knn_points_topk_fat_ellipsoid(spark):
 
 
 def test_ellip_nearest_landmark_query_matches_pure_numpy(spark):
-    """The driver records only a rows-only check for
-    ellip_nearest_landmark (no SQL oracle for WGS84 geodesics); this
-    pins the full query output against an independent pure-numpy
+    """ellip_nearest_landmark's oracle is fixture parquet built by the
+    same kernel (DuckDB cannot express WGS84 geodesics); this pins
+    the full query output against an independent pure-numpy
     evaluation of the same kernel — exact equality after the query's
     own rounding, so the result is hash-stable run to run
     (VERDICT r1 item 8)."""

@@ -1,9 +1,8 @@
 """Sequence packing (operators/packing.py).
 
-doc_seq_pack sits past the driver's 50-row CORRECTNESS draw, so the
-spark-vs-ORACLE_SQL parity here is its executable verification (the
-tests/test_rotation_parity.py protocol), alongside an independent
-pure-Python packer and the packing invariants.
+Spark vs ORACLE_SQL (the tests/test_oracles.py rule, at operator
+level), alongside an independent pure-Python packer and the packing
+invariants.
 """
 
 import collections

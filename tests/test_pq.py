@@ -1,207 +1,18 @@
-"""IVF-PQ ANN (operators/pq.py): structural invariants, exact-int
-parity against an independent numpy replay, and recall vs the exact
+"""IVF-PQ ANN (operators/pq_arrow.py): ksub=256, m>=16, k-means-trained
+residual codebooks and Arrow encode/ADC kernels — Spark-vs-numpy parity
+of the vector source, encode, probe, re-rank and streaming gate, plus
+the committed pq256 fixture's freshness and recall vs the exact
 integer-L2 brute force."""
 
 import numpy as np
 import pytest
 
-from pyspark.sql import functions as F
-
-from geographiclib_go_spark.operators import pq
-
-SF = "/root/testdata/sf0.001"
-DIM, M, KSUB, CELLS, NPROBE, K = 64, 4, 16, 8, 2, 5
-
-
-@pytest.fixture(scope="module")
-def vecs(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>")
-        .alias("embedding"))
-    return pq.quantized(emb).cache()
-
-
-@pytest.fixture(scope="module")
-def arts(vecs):
-    books = pq.train_codebooks(vecs, M, KSUB, DIM)
-    seeds = pq.coarse_seeds(vecs, CELLS, DIM)
-    enc = pq.ivfpq_encode(vecs, books, seeds, DIM).cache()
-    return books, seeds, enc
-
-
-def _np_corpus(vecs):
-    rows = vecs.orderBy("vid").collect()
-    ids = np.array([r.vid for r in rows], dtype=np.int64)
-    X = np.array([r.q for r in rows], dtype=np.int64)
-    return ids, X
-
-
-def test_seed_rows_encode_losslessly(vecs, arts):
-    """Rows whose sub-vectors ARE codebook entries must pick
-    themselves (distance 0), so queries that are seed rows rank
-    themselves first with adc == 0."""
-    books, seeds, enc = arts
-    queries = vecs.filter(F.col("vid") < 8)
-    out = pq.ivfpq_topk(enc, queries, books, seeds, DIM, K,
-                        NPROBE).collect()
-    top1 = {r.qid: (r.vec_id, r.adc) for r in out if r.rank == 1}
-    assert set(top1) == set(range(8))
-    for qid, (vid, adc) in top1.items():
-        assert vid == qid and adc == 0
-
-
-def test_encode_matches_numpy_replay(vecs, arts):
-    """Spark encoding (JVM argmin over literal codebooks) must equal
-    an independent numpy argmin — exact ints, ties to lower code."""
-    books, seeds, enc = arts
-    ids, X = _np_corpus(vecs)
-    sub = DIM // M
-    got = {r.vid: (r.cell, tuple(r[f"c{j}"] for j in range(M)))
-           for r in enc.collect()}
-    S = np.array(seeds, dtype=np.int64)
-    cell = ((X[:, None, :] - S[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    for i, vid in enumerate(ids):
-        codes = []
-        for j in range(M):
-            B = np.array(books[j], dtype=np.int64)
-            d = ((X[i, j * sub:(j + 1) * sub][None, :] - B) ** 2).sum(axis=1)
-            codes.append(int(d.argmin()))
-        assert got[vid] == (int(cell[i]), tuple(codes)), vid
-
-
-def test_adc_scores_match_numpy_replay(vecs, arts):
-    """Flat-PQ ADC (LUT lookups) must equal numpy's table-based
-    asymmetric distances exactly."""
-    books, seeds, enc = arts
-    ids, X = _np_corpus(vecs)
-    idx = {v: i for i, v in enumerate(ids)}
-    sub = DIM // M
-    queries = vecs.filter(F.col("vid").isin([3, 17, 42]))
-    out = pq.pq_adc_topk(enc, queries, books, DIM, k=10).collect()
-    code = {r.vid: [r[f"c{j}"] for j in range(M)] for r in enc.collect()}
-    for r in out:
-        q = X[idx[r.qid]]
-        want = 0
-        for j in range(M):
-            cvec = np.array(books[j][code[r.vec_id][j]], dtype=np.int64)
-            want += int(((q[j * sub:(j + 1) * sub] - cvec) ** 2).sum())
-        assert r.adc == want
-
-
-def test_recall_vs_exact_bruteforce(vecs, arts):
-    """IVF-PQ and flat-PQ top-5 must overlap the exact integer-L2
-    top-5 well above chance.  (Flat PQ is not pointwise >= IVF-PQ:
-    its wider candidate pool can displace true positives with
-    quantization-flattered false ones, so both are floored
-    independently.)"""
-    books, seeds, enc = arts
-    ids, X = _np_corpus(vecs)
-    idx = {v: i for i, v in enumerate(ids)}
-    qids = list(range(8))
-    exact = {}
-    for qid in qids:
-        d = ((X - X[idx[qid]][None, :]) ** 2).sum(axis=1)
-        order = np.lexsort((ids, d))
-        exact[qid] = set(ids[order[:K]].tolist())
-    queries = vecs.filter(F.col("vid") < 8)
-    ivf = pq.ivfpq_topk(enc, queries, books, seeds, DIM, K, NPROBE)
-    flat = pq.pq_adc_topk(enc, queries, books, DIM, K)
-    def recall(df):
-        got = {}
-        for r in df.collect():
-            got.setdefault(r.qid, set()).add(r.vec_id)
-        return np.mean([len(got[q] & exact[q]) / K for q in qids])
-    r_ivf, r_flat = recall(ivf), recall(flat)
-    # self is always recoverable (seed rows encode losslessly) so
-    # recall has a hard floor of 1/K; require clearly above it.
-    assert r_ivf >= 0.3, r_ivf
-    assert r_flat >= 0.3, r_flat
-
-
-def test_streaming_pq_gate_matches_numpy(spark, vecs, arts, tmp_path):
-    """streaming_pq_near_dup_events over a 2-micro-batch arrival file
-    stream, probing the encoded index read back from parquet, must
-    emit exactly the (qid, vec_id, adc) set an independent numpy
-    ADC replay produces for the same threshold and probe cells."""
-    from pyspark.sql import functions as F
-    from geographiclib_go_spark.streaming import polygon_stream as ps
-
-    books, seeds, enc = arts
-    enc.write.mode("overwrite").parquet(str(tmp_path / "encidx"))
-    encoded = spark.read.parquet(str(tmp_path / "encidx"))
-
-    arriving = [5, 23, 77, 131]
-    pdf = (spark.read.parquet(f"{SF}/embeddings.parquet")
-           .filter(F.col("vec_id").isin(arriving))
-           .select("vec_id", F.col("embedding").cast("array<double>")
-                   .alias("embedding"))
-           .orderBy("vec_id").toPandas())
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    spark.createDataFrame(pdf.iloc[:2]).coalesce(1).write.parquet(
-        str(src / "b0"))
-    spark.createDataFrame(pdf.iloc[2:]).coalesce(1).write.parquet(
-        str(src / "b1"))
-    stream = (spark.readStream
-              .schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).parquet(str(src / "*")))
-
-    # independent numpy replay of every probed candidate's ADC
-    ids, X = _np_corpus(vecs)
-    idx = {v: i for i, v in enumerate(ids)}
-    sub = DIM // M
-    S = np.array(seeds, dtype=np.int64)
-    cell_of = ((X[:, None, :] - S[None, :, :]) ** 2).sum(axis=2) \
-        .argmin(axis=1)
-    code = {}
-    for j in range(M):
-        B = np.array(books[j], dtype=np.int64)
-        d = ((X[:, None, j * sub:(j + 1) * sub] - B[None, :, :]) ** 2) \
-            .sum(axis=2)
-        code[j] = d.argmin(axis=1)
-    cand = []
-    for qid in arriving:
-        qv = X[idx[qid]]
-        dc = ((qv[None, :] - S) ** 2).sum(axis=1)
-        probe = set(np.argsort(dc, kind="stable")[:NPROBE].tolist())
-        for i, vid in enumerate(ids):
-            if int(cell_of[i]) not in probe:
-                continue
-            adc = 0
-            for j in range(M):
-                cv = np.array(books[j][code[j][i]], dtype=np.int64)
-                adc += int(((qv[j * sub:(j + 1) * sub] - cv) ** 2).sum())
-            cand.append((qid, int(vid), adc))
-    # threshold at the candidate median: a nontrivial subset passes
-    max_adc = int(np.median([a for _, _, a in cand]))
-    want = {c for c in cand if c[2] <= max_adc}
-    assert 0 < len(want) < len(cand)
-
-    out = ps.streaming_pq_near_dup_events(
-        stream, encoded, books, seeds, DIM, max_adc=max_adc,
-        nprobe=NPROBE)
-    q = (out.writeStream.format("memory").queryName("pq_events")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        got = {(r.qid, r.vec_id, r.adc) for r in
-               spark.sql("SELECT * FROM pq_events").collect()}
-    finally:
-        q.stop()
-    assert got == want
-
-
-# --------------------------------------------------------------------------
-# realistic-parameter path (operators/pq_arrow): ksub=256, m>=16,
-# k-means-trained residual codebooks, Arrow encode/ADC kernels
-# --------------------------------------------------------------------------
-
-from geographiclib_go_spark.operators import pq_arrow as pqa  # noqa: E402
-from geographiclib_go_spark.sources import vectors as vx  # noqa: E402
+from geographiclib_go_spark.operators import pq_arrow as pqa
+from geographiclib_go_spark.sources import vectors as vx
 
 # small-but-real shape for the Spark-vs-numpy parity gates (the full
-# 100k/ksub=256 shape is fixture-gated below and oracle-gated in the
-# driver via queries.emb_ivfpq256_topk)
+# 100k/ksub=256 shape is fixture-gated below and oracle-gated via
+# queries.emb_ivfpq256_topk in tests/test_oracles.py)
 PN, PDIM, PM, PKSUB, PCELLS, PNPROBE, PK = 3000, 64, 16, 32, 8, 3, 5
 PTRAIN, PITERS = 512, 2
 

@@ -168,21 +168,6 @@ def make_gnomonic_fwd_udf(a: float = WGS84_A, f: float = WGS84_F):
     return gnomonic_fwd
 
 
-def make_gnomonic_rev_udf(a: float = WGS84_A, f: float = WGS84_F):
-    schema = _schema(["lat", "lon", "azi", "rk"])
-
-    @pandas_udf(schema)
-    def gnomonic_rev(lat0: pd.Series, lon0: pd.Series, x: pd.Series,
-                     y: pd.Series) -> pd.DataFrame:
-        g = GeodesicModel(a, f)
-        out = kgnomonic.gnomonic_reverse(
-            g, lat0.to_numpy(np.float64), lon0.to_numpy(np.float64),
-            x.to_numpy(np.float64), y.to_numpy(np.float64))
-        return pd.DataFrame(out)
-
-    return gnomonic_rev
-
-
 def make_rhumb_inverse_udf(a: float = WGS84_A, f: float = WGS84_F):
     """rhumb_inverse(lat1, lon1, lat2, lon2) -> struct(s12, azi12):
     loxodrome length + constant course (kernels/rhumb.py — not in the

@@ -108,25 +108,6 @@ def polygon_compute(g: GeodesicModel, lats, lons, polyline: bool = False,
     return {"num": num, "perimeter": perimeter, "area": area}
 
 
-def polygon_edges(g: GeodesicModel, lats, lons, polyline: bool = False):
-    """Per-edge (s12, S12area, transit) arrays for a closed polygon —
-    the distributive part of the aggregation, used by the Spark
-    partial+final (hi,lo) aggregation path."""
-    lats = gm.arr(lats)
-    lons = gm.arr(lons)
-    caps = POLYLINE_CAPS if polyline else POLYGON_CAPS
-    if polyline:
-        la1, lo1, la2, lo2 = lats[:-1], lons[:-1], lats[1:], lons[1:]
-    else:
-        la1, lo1 = lats, lons
-        la2, lo2 = np.roll(lats, -1), np.roll(lons, -1)
-    inv = kinverse.gen_inverse(g, la1, lo1, la2, lo2, caps)
-    s12 = inv["s12"]
-    s12area = inv["S12area"] if not polyline else np.full_like(s12, np.nan)
-    tr = transit(lo1, lo2) if not polyline else np.zeros(s12.size, np.int64)
-    return s12, s12area, tr
-
-
 # --- double-double (hi, lo) accumulation for distributed merges ----------
 
 def dd_add(hi, lo, y):

@@ -88,11 +88,6 @@ def _eatanhe(x, es):
     return np.zeros_like(np.asarray(x, dtype=np.float64))
 
 
-def isometric_lat(r: RhumbModel, phi):
-    """psi(phi), radians in / isometric units out."""
-    return np.arcsinh(np.tan(phi)) - _eatanhe(np.sin(phi), r.es)
-
-
 def mu_from_phi(r: RhumbModel, phi):
     """Rectifying series argument: meridian_dist(phi) / A."""
     out = np.asarray(phi, dtype=np.float64).copy()

@@ -157,21 +157,6 @@ def cell_center(cell, res: int):
     return xyz_to_latlon(x, y, z)
 
 
-def cell_corners(cell, res: int):
-    """4 corner (lat, lon) arrays, shape (..., 4)."""
-    f, i, j = cell_to_fij(cell, res)
-    n = 1 << res
-    lats, lons = [], []
-    for di, dj in ((0, 0), (1, 0), (1, 1), (0, 1)):
-        u = _st_to_uv((i + di) / n)
-        v = _st_to_uv((j + dj) / n)
-        x, y, z = _uv_to_xyz(f, u, v)
-        la, lo = xyz_to_latlon(x, y, z)
-        lats.append(la)
-        lons.append(lo)
-    return np.stack(lats, axis=-1), np.stack(lons, axis=-1)
-
-
 def cell_parent(cell, res: int, parent_res: int):
     """Ancestor cell id (hierarchy is a shift: face prefix preserved)."""
     return np.asarray(cell, dtype=np.int64) >> np.int64(

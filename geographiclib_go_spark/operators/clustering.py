@@ -45,6 +45,7 @@ from geographiclib_go_spark.kernels.geodesic import (
     GeodesicModel, WGS84_A, WGS84_F)
 from geographiclib_go_spark.operators import cells as kcells
 from geographiclib_go_spark.operators import components as cc
+from geographiclib_go_spark.operators import nearest as nn
 from geographiclib_go_spark.operators import spatial_join as sj
 
 
@@ -100,8 +101,7 @@ def eps_self_edges(ids: DataFrame, eps_m: float,
 def dbscan(points: DataFrame, eps_m: float, min_pts: int,
            id_col: str = "id",
            a: float = WGS84_A, f: float = WGS84_F,
-           point_cols=("lat", "lon"),
-           strategy: str = "auto") -> DataFrame:
+           point_cols=("lat", "lon")) -> DataFrame:
     """(id, role, cluster_id) for every input point.
 
     role: 'core'   — >= min_pts points within eps_m (self included);
@@ -111,23 +111,20 @@ def dbscan(points: DataFrame, eps_m: float, min_pts: int,
     take the minimum cluster among their core neighbors); NULL for
     noise.  Ids must be unique non-null longs.
 
-    strategy is forwarded to distance_join ('auto' picks the
-    closure-broadcast scan for small point sets, the cell-cover
-    equi-join otherwise).
+    Size and ids decide the eps self-join, as in
+    spatial_join.distance_join: a point set of at most
+    nearest.SCAN_MAX_QUERIES rows with unique non-null ids is read
+    once and scanned against itself (closure-broadcast, map-only);
+    any other takes the celled symmetric self-join (eps_self_edges).
     """
     ids = points.select(F.col(id_col).cast("long").alias("qid"),
                         F.col(point_cols[0]).alias("lat"),
                         F.col(point_cols[1]).alias("lon"))
-    if strategy == "auto":
-        strategy = ("scan"
-                    if sj._scan_eligible(ids, "qid", limit_rows=4096)
-                    else "cover")
-    if strategy == "scan":
-        # small point set: closure-broadcast scan join (map-only)
-        pairs = sj.distance_join(points, ids, radius_m=eps_m, a=a, f=f,
-                                 point_cols=point_cols,
-                                 query_cols=("lat", "lon"),
-                                 id_col="qid", strategy="scan")
+    q = nn._small_side(ids, "qid", limit=nn.SCAN_MAX_QUERIES,
+                       unique=True)
+    if q is not None:
+        pairs = nn._radius_scan(points, ids, q, eps_m, a, f, point_cols,
+                                "qid")
         # directed neighbor list (src -> dst), self-pair included —
         # the join emits (p, p) at s12 = 0, which is exactly the
         # "including p" the core test wants

@@ -37,8 +37,8 @@ task (<= local_threshold edges, ~32 MB at the default) the closure
 runs as a SINGLE single-partition mapInPandas pass — vectorized
 numpy min-label propagation with pointer-jumping, one Spark job, no
 iteration-driving driver loop — the same measured-size dispatch the
-spatial joins use (spatial_join.py strategy='auto').  Above the
-threshold it is the distributed star alternation.  Both paths
+spatial joins use (spatial_join.py: the query side picks the plan).
+Above the threshold it is the distributed star alternation.  Both paths
 produce the identical (id, component_id = component minimum)
 labeling and are parity-tested against each other and a union-find
 reference (tests/test_components.py).

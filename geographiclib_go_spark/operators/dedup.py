@@ -337,17 +337,6 @@ def shingle_set_arrays(df: DataFrame, text_col: str = "text",
                      sh(F.col(text_col)).alias("sset"))
 
 
-def shingle_hash_rows(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      shingle: int = 5) -> DataFrame:
-    """(doc_id, hw): shingle_set_arrays exploded to one row per
-    distinct shingle hash — the posting-list form."""
-    return (shingle_set_arrays(df, text_col, id_col, shingle)
-            .select("doc_id", F.explode("sset").alias("hw")))
-
-
-
-
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", shingle: int = 5,
                         tau100: int = 90) -> DataFrame:

@@ -36,7 +36,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -49,6 +49,10 @@ from geographiclib_go_spark.kernels.inverse import inverse as kinverse
 
 MAX_DIM_ROWS = 100_000  # closure-broadcast budget (3 float64 arrays)
 CHUNK = 8192  # rows per kernel slice (keeps temporaries in cache)
+# query sides up to this size are scanned by the spatial joins
+# (spatial_join.distance_join / knn_join, clustering.dbscan); larger
+# ones, or ones whose ids are null or repeated, take the cell plans
+SCAN_MAX_QUERIES = 4096
 
 
 def _unit_vectors(lat_deg: np.ndarray, lon_deg: np.ndarray) -> np.ndarray:
@@ -125,31 +129,60 @@ def nearest_dim_kernel(g: GeodesicModel, lat: np.ndarray, lon: np.ndarray,
     s12 = kinverse(g, lat[rows], lon[rows],
                    dim_lat[cols], dim_lon[cols], C.DISTANCE)["s12"]
 
-    # per-row top-k among candidates: sort by (row, s12), take first kk
-    order = np.lexsort((s12, rows))
-    rows_o, cols_o, s_o = rows[order], cols[order], s12[order]
-    # position of each candidate within its row group
-    first = np.r_[True, rows_o[1:] != rows_o[:-1]]
-    grp_start = np.maximum.accumulate(np.where(first,
-                                               np.arange(rows_o.size), 0))
-    pos = np.arange(rows_o.size) - grp_start
-    keep = pos < kk
-
+    sel, pos = _first_k(rows, s12, kk)
     out_ids = np.full((n, kk), -1, dtype=np.int64)
     out_s12 = np.full((n, kk), np.nan)
-    out_ids[rows_o[keep], pos[keep]] = dim_ids[cols_o[keep]]
-    out_s12[rows_o[keep], pos[keep]] = s_o[keep]
+    out_ids[rows[sel], pos] = dim_ids[cols[sel]]
+    out_s12[rows[sel], pos] = s12[sel]
     return out_ids, out_s12
 
 
-def _dim_arrays(dim_rows):
-    """dim_rows: iterable of (id, lat, lon) -> (ids int64, lat, lon)."""
-    dim = list(dim_rows)
-    if not dim or len(dim) > MAX_DIM_ROWS:
-        raise ValueError(f"dim side must have 1..{MAX_DIM_ROWS} rows")
-    return (np.array([int(r[0]) for r in dim], dtype=np.int64),
-            np.array([float(r[1]) for r in dim]),
-            np.array([float(r[2]) for r in dim]))
+def _first_k(group: np.ndarray, s12: np.ndarray, k: int):
+    """(idx, pos): the indices of the k smallest s12 within each group,
+    ordered by (group, s12) with ties in input order (stable lexsort),
+    and each one's 0-based rank in its group."""
+    order = np.lexsort((s12, group))
+    g = group[order]
+    first = np.r_[True, g[1:] != g[:-1]]
+    start = np.maximum.accumulate(np.where(first, np.arange(g.size), 0))
+    pos = np.arange(g.size) - start
+    keep = pos < k
+    return order[keep], pos[keep]
+
+
+def _small_side(side, id_col: str = None, cols=("lat", "lon"),
+                limit: int = MAX_DIM_ROWS, unique: bool = False):
+    """(ids int64, lat, lon) of a small side, read with one bounded
+    collect, or None when the side is not small: empty, over `limit`
+    rows, without an `id_col` column, with a null id, or (unique=True)
+    with a repeated id.  side: a DataFrame (its id_col and lat/lon
+    `cols` are read) or an iterable of (id, lat, lon)."""
+    if isinstance(side, DataFrame):
+        if id_col not in side.columns:
+            return None
+        # limit BEFORE materializing: an oversized side must come back
+        # as "not small", not OOM the driver inside collect()
+        rows = side.select(id_col, *cols).limit(limit + 1).collect()
+    else:
+        rows = list(side)
+    if not rows or len(rows) > limit or any(r[0] is None for r in rows):
+        return None
+    ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+    if unique and np.unique(ids).size != ids.size:
+        return None
+    return (ids, np.array([float(r[1]) for r in rows]),
+            np.array([float(r[2]) for r in rows]))
+
+
+def _dim_arrays(side, what: str = "dim", id_col: str = None,
+                cols=("lat", "lon"), unique: bool = False):
+    """_small_side of a side that must be small; ValueError if not."""
+    q = _small_side(side, id_col, cols, unique=unique)
+    if q is None:
+        raise ValueError(
+            f"{what} side must have 1..{MAX_DIM_ROWS} rows and non-null"
+            + (" unique" if unique else "") + " ids")
+    return q
 
 
 def make_nearest_dim_udf(dim_rows, k: int = 1,
@@ -219,6 +252,85 @@ def make_nearest_s12_udf(dim_rows, a: float = WGS84_A, f: float = WGS84_F):
     return nn_s12
 
 
+def _scan_join(points: DataFrame, queries, q, id_col: str, point_cols,
+               g: GeodesicModel, cand, keep, k: int = None) -> DataFrame:
+    """One map-only scan of `points` against the small side
+    q = (ids, lat, lon), CHUNK rows at a time: cand(ang) marks the
+    (point, query) candidates from the chord angles, the exact kernel
+    measures them, keep(cols, s12) picks the rows to emit.  k set:
+    a global window keeps each query's k nearest.  Then the q_-prefixed
+    query columns are broadcast-joined back on q_<id_col>."""
+    qids, qlat, qlon = q
+    qvec = _unit_vectors(qlat, qlon)
+    lat_col, lon_col = point_cols
+    qkey = f"q_{id_col}"
+    out_schema = T.StructType(
+        list(points.schema.fields)
+        + [T.StructField(qkey, T.LongType(), False),
+           T.StructField("s12", T.DoubleType(), False)])
+
+    def gen(batches):
+        for pdf in batches:
+            for lo_i in range(0, len(pdf), CHUNK):
+                sub = pdf.iloc[lo_i:lo_i + CHUNK]
+                la = sub[lat_col].to_numpy(np.float64)
+                lo = sub[lon_col].to_numpy(np.float64)
+                ang = np.arccos(np.clip(_unit_vectors(la, lo) @ qvec.T,
+                                        -1.0, 1.0))
+                rows, cols = np.nonzero(cand(ang))
+                if rows.size == 0:
+                    continue
+                s12 = kinverse(g, la[rows], lo[rows], qlat[cols],
+                               qlon[cols], C.DISTANCE)["s12"]
+                sel = keep(cols, s12)
+                out = sub.iloc[rows[sel]].copy()
+                out[qkey] = qids[cols[sel]]
+                out["s12"] = s12[sel]
+                yield out
+
+    out = points.mapInPandas(gen, out_schema)
+    if k is not None:
+        w = Window.partitionBy(qkey).orderBy(F.col("s12").asc())
+        out = (out.withColumn("rank", F.row_number().over(w))
+               .filter(F.col("rank") <= k))
+    if not isinstance(queries, DataFrame):
+        queries = _ldf.literal_df(
+            points.sparkSession, zip(*(v.tolist() for v in q)),
+            f"{id_col} long, lat double, lon double")
+    return out.join(F.broadcast(queries.select(
+        [F.col(c).alias(f"q_{c}") for c in queries.columns])), qkey)
+
+
+def _knn_scan(points: DataFrame, queries, q, k: int, a: float, f: float,
+              point_cols, id_col: str) -> DataFrame:
+    """knn_points_topk over an already-read small side q."""
+    g = GeodesicModel(a, f)
+    ratio, pad = _chord_margin(g)
+
+    def cand(ang):
+        # a point is a candidate for a query if it could beat the
+        # chunk's kth chord-nearest point to that query
+        kk = min(k, ang.shape[0])
+        kth = (np.partition(ang, kk - 1, axis=0)[kk - 1]
+               if kk < ang.shape[0] else ang.max(axis=0))
+        return ang <= kth * ratio + pad
+
+    return _scan_join(points, queries, q, id_col, point_cols, g, cand,
+                      lambda cols, s12: _first_k(cols, s12, k)[0], k=k)
+
+
+def _radius_scan(points: DataFrame, queries, q, radius_m: float,
+                 a: float, f: float, point_cols,
+                 id_col: str) -> DataFrame:
+    """radius_dim_join over an already-read small side q."""
+    g = GeodesicModel(a, f)
+    ratio, pad = _chord_margin(g)
+    ang_max = (radius_m / g.b) * ratio + pad
+    return _scan_join(points, queries, q, id_col, point_cols, g,
+                      lambda ang: ang <= ang_max,
+                      lambda cols, s12: np.flatnonzero(s12 <= radius_m))
+
+
 def knn_points_topk(points: DataFrame, queries, k: int,
                     a: float = WGS84_A, f: float = WGS84_F,
                     point_cols=("lat", "lon"),
@@ -233,85 +345,13 @@ def knn_points_topk(points: DataFrame, queries, k: int,
     big side — the scale plan for "nearest images to each landmark"
     at 10^12 rows.
 
-    queries: DataFrame (id, lat, lon) or iterable of (id, lat, lon).
-    Output matches spatial_join.knn_join: q_* columns + point columns
-    + s12 + rank.
+    queries: DataFrame (id, lat, lon) or iterable of (id, lat, lon),
+    1..MAX_DIM_ROWS rows with unique non-null ids (the window keys on
+    the id).  Output matches spatial_join.knn_join: q_* columns +
+    point columns + s12 + rank.
     """
-    spark = points.sparkSession
-    if isinstance(queries, DataFrame):
-        qdf = queries
-        # limit-probe BEFORE materializing: an oversized query side must
-        # raise, not OOM the driver inside collect()
-        qrows = [(r[id_col], r[query_cols[0]], r[query_cols[1]])
-                 for r in qdf.limit(MAX_DIM_ROWS + 1).collect()]
-    else:
-        qrows = list(queries)
-        qdf = _ldf.literal_df(
-            spark, [(int(i), float(la), float(lo)) for i, la, lo in qrows],
-            f"{id_col} long, lat double, lon double")
-    if not qrows or len(qrows) > MAX_DIM_ROWS:
-        raise ValueError(f"query side must have 1..{MAX_DIM_ROWS} rows")
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    if np.unique(qids).size != qids.size:
-        raise ValueError(
-            f"{id_col} must be unique for the scan-topk strategy "
-            "(the global window merges duplicate ids into one top-k); "
-            "dedupe the query side or use the cover/ring strategy")
-    qlat = np.array([float(r[1]) for r in qrows])
-    qlon = np.array([float(r[2]) for r in qrows])
-    qvec = _unit_vectors(qlat, qlon)
-    g = GeodesicModel(a, f)
-    ratio, pad = _chord_margin(g)
-    lat_col, lon_col = point_cols
-
-    qkey = f"q_{id_col}"
-    from pyspark.sql import types as T
-    out_schema = T.StructType(
-        list(points.schema.fields)
-        + [T.StructField(qkey, T.LongType(), False),
-           T.StructField("s12", T.DoubleType(), False)])
-
-    def gen(batches):
-        for pdf in batches:
-            n_all = len(pdf)
-            for lo_i in range(0, n_all, CHUNK):
-                sub = pdf.iloc[lo_i:lo_i + CHUNK]
-                la = sub[lat_col].to_numpy(np.float64)
-                lo = sub[lon_col].to_numpy(np.float64)
-                kk = min(k, la.size)
-                if kk == 0:
-                    continue
-                p = _unit_vectors(la, lo)
-                ang = np.arccos(np.clip(p @ qvec.T, -1.0, 1.0))
-                if kk < la.size:
-                    kth = np.partition(ang, kk - 1, axis=0)[kk - 1, :]
-                else:
-                    kth = ang.max(axis=0)
-                cand = ang <= (kth[None, :] * ratio + pad)
-                rows, cols = np.nonzero(cand)
-                s12 = kinverse(g, la[rows], lo[rows], qlat[cols],
-                               qlon[cols], C.DISTANCE)["s12"]
-                order = np.lexsort((s12, cols))
-                rows_o, cols_o, s_o = (rows[order], cols[order],
-                                       s12[order])
-                first = np.r_[True, cols_o[1:] != cols_o[:-1]]
-                grp = np.maximum.accumulate(
-                    np.where(first, np.arange(cols_o.size), 0))
-                keep = (np.arange(cols_o.size) - grp) < kk
-                out = sub.iloc[rows_o[keep]].copy()
-                out[qkey] = qids[cols_o[keep]]
-                out["s12"] = s_o[keep]
-                yield out
-
-    cand_df = points.mapInPandas(gen, out_schema)
-    from pyspark.sql import Window
-    w = Window.partitionBy(qkey).orderBy(F.col("s12").asc())
-    top = (cand_df.withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") <= k))
-    q_pref = qdf
-    for c in q_pref.columns:
-        q_pref = q_pref.withColumnRenamed(c, f"q_{c}")
-    return top.join(F.broadcast(q_pref), qkey)
+    q = _dim_arrays(queries, "query", id_col, query_cols, unique=True)
+    return _knn_scan(points, queries, q, k, a, f, point_cols, id_col)
 
 
 def radius_dim_join(points: DataFrame, queries, radius_m: float,
@@ -326,68 +366,13 @@ def radius_dim_join(points: DataFrame, queries, radius_m: float,
     the scan; the exact kernel refines.  No cover explode, no
     broadcast join, no shuffle of the big side.
 
-    Output matches spatial_join.distance_join: q_* columns + point
-    columns + s12.
+    queries as in knn_points_topk (unique ids: the join back on the id
+    would multiply rows).  Output matches spatial_join.distance_join:
+    q_* columns + point columns + s12.
     """
-    spark = points.sparkSession
-    if isinstance(queries, DataFrame):
-        qdf = queries
-        # limit-probe BEFORE materializing (see knn_points_topk)
-        qrows = [(r[id_col], r[query_cols[0]], r[query_cols[1]])
-                 for r in qdf.limit(MAX_DIM_ROWS + 1).collect()]
-    else:
-        qrows = list(queries)
-        qdf = _ldf.literal_df(
-            spark, [(int(i), float(la), float(lo)) for i, la, lo in qrows],
-            f"{id_col} long, lat double, lon double")
-    if not qrows or len(qrows) > MAX_DIM_ROWS:
-        raise ValueError(f"query side must have 1..{MAX_DIM_ROWS} rows")
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    if np.unique(qids).size != qids.size:
-        raise ValueError(
-            f"{id_col} must be unique for the scan strategy (the "
-            "re-join on the id would multiply candidate rows); dedupe "
-            "the query side or use the cover strategy")
-    qlat = np.array([float(r[1]) for r in qrows])
-    qlon = np.array([float(r[2]) for r in qrows])
-    qvec = _unit_vectors(qlat, qlon)
-    g = GeodesicModel(a, f)
-    ratio, pad = _chord_margin(g)
-    ang_max = (radius_m / g.b) * ratio + pad
-    lat_col, lon_col = point_cols
-    qkey = f"q_{id_col}"
-    out_schema = T.StructType(
-        list(points.schema.fields)
-        + [T.StructField(qkey, T.LongType(), False),
-           T.StructField("s12", T.DoubleType(), False)])
-
-    def gen(batches):
-        for pdf in batches:
-            n_all = len(pdf)
-            for lo_i in range(0, n_all, CHUNK):
-                sub = pdf.iloc[lo_i:lo_i + CHUNK]
-                la = sub[lat_col].to_numpy(np.float64)
-                lo = sub[lon_col].to_numpy(np.float64)
-                if la.size == 0:
-                    continue
-                p = _unit_vectors(la, lo)
-                ang = np.arccos(np.clip(p @ qvec.T, -1.0, 1.0))
-                rows, cols = np.nonzero(ang <= ang_max)
-                if rows.size == 0:
-                    continue
-                s12 = kinverse(g, la[rows], lo[rows], qlat[cols],
-                               qlon[cols], C.DISTANCE)["s12"]
-                keep = s12 <= radius_m
-                out = sub.iloc[rows[keep]].copy()
-                out[qkey] = qids[cols[keep]]
-                out["s12"] = s12[keep]
-                yield out
-
-    cand_df = points.mapInPandas(gen, out_schema)
-    q_pref = qdf
-    for c in q_pref.columns:
-        q_pref = q_pref.withColumnRenamed(c, f"q_{c}")
-    return cand_df.join(F.broadcast(q_pref), qkey)
+    q = _dim_arrays(queries, "query", id_col, query_cols, unique=True)
+    return _radius_scan(points, queries, q, radius_m, a, f, point_cols,
+                        id_col)
 
 
 def nearest_dim_join(big: DataFrame, dim, k: int = 1,
@@ -403,11 +388,7 @@ def nearest_dim_join(big: DataFrame, dim, k: int = 1,
     computes it; k>1 posexplodes to one output row per (big row, rank).
     """
     if isinstance(dim, DataFrame):
-        cols = dim.columns
-        # limit-probe BEFORE materializing; make_nearest_dim_udf re-checks
-        # the exact 1..MAX_DIM_ROWS bound on whatever list arrives
-        dim = [(r[cols[0]], r["lat"], r["lon"])
-               for r in dim.limit(MAX_DIM_ROWS + 1).collect()]
+        dim = list(zip(*_dim_arrays(dim, id_col=dim.columns[0])))
     else:
         dim = list(dim)  # read twice for k=1
     udf = make_nearest_dim_udf(dim, k=k, a=a, f=f)

@@ -18,11 +18,12 @@ inverse geodesic kernel (inverse.go:30-355) as the exact predicate:
   plan_polygon_res, broadcast) -> equi-join -> exact point-in-polygon
   refine.
 
-distance_join and knn_join auto-select a physical strategy: when the
-query side is small enough to ship in a UDF closure they route to the
-map-only scans in operators/nearest.py (radius_dim_join /
-knn_points_topk — zero shuffle of the big side); the cover/ring plans
-here remain the large-query-side path.
+distance_join and knn_join (and clustering.dbscan) let the query
+side pick the plan: size and ids decide.  A side of at most
+nearest.SCAN_MAX_QUERIES rows with a unique non-null id is read once
+and shipped in a UDF closure to the map-only scans of
+operators/nearest.py (zero shuffle of the big side); any other side
+takes the cover/ring plans here.
 
 All kernels run as Arrow pandas UDFs over numpy batches; the only
 per-row Python is driver-side cover planning over the SMALL side.
@@ -31,7 +32,6 @@ per-row Python is driver-side cover planning over the SMALL side.
 from __future__ import annotations
 
 import math
-from typing import Iterable
 
 import numpy as np
 import pandas as pd
@@ -41,13 +41,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from geographiclib_go_spark.kernels import caps as C
 from geographiclib_go_spark.kernels import geomath as gm
 from geographiclib_go_spark.kernels.geodesic import (
     GeodesicModel, WGS84_A, WGS84_F)
-from geographiclib_go_spark.functions.geodesic_udfs import (
-    make_inverse_s12_udf, make_inverse_udf)
+from geographiclib_go_spark.functions.geodesic_udfs import make_inverse_s12_udf
 from geographiclib_go_spark.operators import cells as kcells
+from geographiclib_go_spark.operators import nearest as _nn
 from geographiclib_go_spark.operators import pip as kpip
 
 
@@ -140,33 +139,27 @@ def distance_join(points: DataFrame, queries: DataFrame, radius_m: float,
                   res: int = None,
                   a: float = WGS84_A, f: float = WGS84_F,
                   point_cols=("lat", "lon"), query_cols=("lat", "lon"),
-                  broadcast_queries: bool = None,
-                  id_col: str = "qid",
-                  strategy: str = "auto") -> DataFrame:
+                  id_col: str = "qid") -> DataFrame:
     """All (query, point) pairs with geodesic s12 <= radius_m.
 
     Output: query columns (prefixed q_), point columns, s12.
 
-    Strategies: "scan" (auto when the query side is small, has an
-    id_col, and its ids are distinct) — map-only chord-bound prefilter
-    + exact refine inside the points scan, no shuffle of the big side
-    (operators/nearest.radius_dim_join); note `res` and
-    `broadcast_queries` do not apply under "scan" (there is no cover
-    and no join to hint).  "cover" — cell-cap cover explode +
-    equi-join + refine, for query sides too large to ship in a
-    closure (and the fallback when ids are absent or duplicated,
-    since it preserves per-row query identity).
+    Size and ids decide the plan.  A query side of at most
+    nearest.SCAN_MAX_QUERIES rows with a unique non-null id_col is
+    read once and scanned: map-only chord-bound prefilter + exact
+    refine inside the points scan, no shuffle of the big side
+    (nearest.radius_dim_join; `res` does not apply, there is no
+    cover).  Any other side — larger, or with ids absent, null or
+    repeated — takes the cell-cap cover explode + equi-join + refine,
+    which keeps per-row query identity; the exploded cover is
+    broadcast when the query side is small (_estimate_small), else
+    sort-merge joined.
     """
-    if strategy == "auto":
-        strategy = ("scan"
-                    if _scan_eligible(queries, id_col, limit_rows=4096)
-                    else "cover")
-    if strategy == "scan":
-        from geographiclib_go_spark.operators import nearest as _nn
-        return _nn.radius_dim_join(points, queries, radius_m, a=a, f=f,
-                                   point_cols=point_cols,
-                                   query_cols=query_cols,
-                                   id_col=id_col)
+    q = _nn._small_side(queries, id_col, query_cols,
+                        _nn.SCAN_MAX_QUERIES, unique=True)
+    if q is not None:
+        return _nn._radius_scan(points, queries, q, radius_m, a, f,
+                                point_cols, id_col)
     plan_res, radius_rad = plan_radius(radius_m, a, f)
     if res is None:
         res = plan_res
@@ -185,9 +178,8 @@ def distance_join(points: DataFrame, queries: DataFrame, radius_m: float,
     # exploded query cover when it is small, else sort-merge.
     # estimate on the un-exploded query side (cheap scan; the cover
     # multiplies rows by a known ~cap/cell factor)
-    if broadcast_queries is None:
-        broadcast_queries = _estimate_small(queries, limit_rows=20_000)
-    qj = F.broadcast(q) if broadcast_queries else q.hint("merge")
+    small = _estimate_small(queries, limit_rows=20_000)
+    qj = F.broadcast(q) if small else q.hint("merge")
 
     inv = make_inverse_s12_udf(a, f)
     joined = pts.join(qj, "_cell", "inner")
@@ -213,57 +205,31 @@ def _estimate_small(df: DataFrame, limit_rows: int = 200_000) -> bool:
         return False
 
 
-def _scan_eligible(queries: DataFrame, id_col: str,
-                   limit_rows: int = 4096) -> bool:
-    """The closure-scan strategies key per-query state on id_col, so
-    they require it present AND distinct (duplicate ids would merge
-    top-k sets / multiply radius matches); the cover/ring plans
-    preserve per-row identity and take over otherwise.  One Spark job:
-    count + countDistinct over a limit(limit_rows+1) slice (if the
-    slice overflows the limit the side is big and the answer is False
-    regardless of which rows the limit picked)."""
-    if id_col not in queries.columns:
-        return False
-    try:
-        row = (queries.select(id_col).limit(limit_rows + 1)
-               .agg(F.count("*").alias("_n"),
-                    F.countDistinct(id_col).alias("_d")).collect()[0])
-        return row["_n"] <= limit_rows and row["_n"] == row["_d"]
-    except Exception:
-        return False
-
-
 def knn_join(points: DataFrame, queries: DataFrame, k: int,
              res: int = None, a: float = WGS84_A, f: float = WGS84_F,
              point_cols=("lat", "lon"), query_cols=("lat", "lon"),
-             id_col: str = "qid", max_rounds: int = 6,
-             strategy: str = "auto") -> DataFrame:
+             id_col: str = "qid", max_rounds: int = 6) -> DataFrame:
     """k nearest points for each query row (geodesic distance).
 
     Returns q_* columns + point columns + s12 + rank (1..k).
 
-    Two physical strategies (selection logged via the plan shape):
-    - "scan_topk" (auto-chosen when the query side is small): single
-      scan of the points emitting per-chunk local top-k candidates
-      per query, then a tiny global window — no driver rounds, no
-      shuffle of the big side (operators/nearest.knn_points_topk).
-    - "ring": iterative cell-ring expansion; resolved queries drop
-      out each round; termination bound is cells.ring_bound_m
-      (conservative vs the kernel, see tests/test_cells.py).  Used
-      when the query side is too large to ship in a closure, or when
-      query ids are missing/duplicated (the ring plan keys no state
-      on them).
+    Size and ids decide the plan:
+    - a query side of at most nearest.SCAN_MAX_QUERIES rows with a
+      unique non-null id_col is read once and scanned: per-chunk local
+      top-k candidates per query, then a tiny global window — no
+      driver rounds, no shuffle of the big side
+      (nearest.knn_points_topk; `res` and `max_rounds` do not apply);
+    - any other side takes iterative cell-ring expansion; resolved
+      queries drop out each round; termination bound is
+      cells.ring_bound_m (conservative vs the kernel, see
+      tests/test_cells.py).  It keys no driver state on the ids, and
+      repeated ids fail on action (below).
     """
-    if strategy == "auto":
-        strategy = ("scan_topk"
-                    if _scan_eligible(queries, id_col, limit_rows=4096)
-                    else "ring")
-    if strategy == "scan_topk":
-        from geographiclib_go_spark.operators import nearest as _nn
-        return _nn.knn_points_topk(points, queries, k, a=a, f=f,
-                                   point_cols=point_cols,
-                                   query_cols=query_cols,
-                                   id_col=id_col)
+    q = _nn._small_side(queries, id_col, query_cols,
+                        _nn.SCAN_MAX_QUERIES, unique=True)
+    if q is not None:
+        return _nn._knn_scan(points, queries, q, k, a, f, point_cols,
+                             id_col)
     g = GeodesicModel(a, f)
     # NO full scan of the fact table at planning time (VERDICT r2
     # item 4): row count from parquet footers (driver-side metadata,
@@ -293,7 +259,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     for c in q.columns:
         q = q.withColumnRenamed(c, f"q_{c}")
     qid = f"q_{id_col}"
-    # kNN output is keyed on id_col in every strategy (the per-query
+    # kNN output is keyed on id_col on both paths (the per-query
     # top-k window partitions on it), so uniqueness is a semantic
     # requirement.  Instead of a standalone eager count/countDistinct
     # job over the (by definition large) query side, the check rides
@@ -311,8 +277,8 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     pts = with_cell(points, res, *point_cols, out="_cell").cache()
     inv = make_inverse_s12_udf(a, f)
 
-    # the query side is LARGE here (the small side routes to
-    # scan_topk), so per-query state never touches the driver: the
+    # the query side is LARGE here (the small side routes to the
+    # scan), so per-query state never touches the driver: the
     # resolved set is a DataFrame, rounds advance via semi/anti joins,
     # and the only driver-side values are one boolean per round
     # ("anything left?").  No id list ever ships in a plan or closure.

@@ -428,11 +428,3 @@ def verify_stage(spark: SparkSession, root: str, stage: str) -> bool:
     stored_rows = read_lineage(spark, root, stage) \
         .agg(F.sum("rows")).collect()[0][0]
     return data.count() == (stored_rows or 0)
-
-
-def completed_partition_keys(spark: SparkSession, root: str, stage: str,
-                             key: str) -> DataFrame:
-    """Distinct values of `key` already present in the current stage
-    output — subtract with exceptAll/left_anti to resume partial
-    fan-out work at sub-stage granularity."""
-    return read_stage(spark, root, stage).select(key).distinct()

@@ -49,13 +49,6 @@ ANTARCTICA_RING = (
 )
 
 
-def landmarks_df(spark: SparkSession) -> DataFrame:
-    from geographiclib_go_spark.functions import localdf as ldf
-    return ldf.literal_df(
-        spark, [(int(i), float(la), float(lo)) for i, la, lo in DEFAULT_LANDMARKS],
-        "qid long, lat double, lon double")
-
-
 def tile_and_join(spark: SparkSession, images: DataFrame,
                   tile_res: int = 6, knn_k: int = 1,
                   stage_root: str = None,

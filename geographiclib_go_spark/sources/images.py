@@ -115,18 +115,12 @@ def ppm_decode(data: bytes) -> np.ndarray:
     return np.frombuffer(parts[3], dtype=np.uint8).reshape(h, w, 3)
 
 
-def jpegsim_encode(pix: np.ndarray, q: int = 8) -> bytes:
-    """Lossy-sim codec: quantize channels to q-level steps and store as
-    PPM payload behind a JSIM header.  PSNR vs original ~ 40.9 dB on
-    average for q = 8 (uniform quantization error, mse ~ q^2/12);
+def jpegsim_decode(data: bytes) -> np.ndarray:
+    """Lossy-sim codec: channels quantized to q-level steps (q = 8),
+    stored as a PPM payload behind a JSIM header.  PSNR vs original
+    ~ 40.9 dB on average (uniform quantization error, mse ~ q^2/12);
     individual images can dip slightly below 40 — the per-row flag is
     computed exactly (integer sse) by queries.image_row_invariants."""
-    step = max(1, 256 // (256 // q))  # = q
-    qpix = ((pix.astype(np.int32) // q) * q + q // 2).clip(0, 255)
-    return b"JSIM\n" + ppm_encode(qpix.astype(np.uint8))
-
-
-def jpegsim_decode(data: bytes) -> np.ndarray:
     if not data.startswith(b"JSIM\n"):
         raise ValueError("not a jpeg-sim payload")
     return ppm_decode(data[5:])

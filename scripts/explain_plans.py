@@ -102,17 +102,21 @@ def main():
         "hashes on user_id; everything else is map-side.",
         formatted(Q.events_asof_view(spark, sf))))
 
-    # kNN ring round (large-query-side strategy): capture the shape of
+    # kNN ring round (the large-query-side plan): capture the shape of
     # one expansion round — cell equi-join (no broadcast of the big
     # cover side), window top-k, and the distributed done-set
-    # semi-join.  Built lazily here (strategy='ring' on a small side
-    # would execute driver rounds if collected; formatted() only
-    # inspects the plan of the first round's output lineage).
+    # semi-join.  The 500-row side is under the scan limit, so the
+    # limit is zeroed here to get the ring plan; formatted() only
+    # inspects the plan of the first round's output lineage.
     from geographiclib_go_spark.operators import spatial_join as sj
     pts = Q._customer_points(spark, sf)
     qside = pts.selectExpr("c_custkey as qid", "lat", "lon").limit(500)
-    ring = sj.knn_join(pts.select("lat", "lon", "c_custkey"), qside,
-                       k=2, res=3, strategy="ring", max_rounds=1)
+    scan_max, nno.SCAN_MAX_QUERIES = nno.SCAN_MAX_QUERIES, 0
+    try:
+        ring = sj.knn_join(pts.select("lat", "lon", "c_custkey"), qside,
+                           k=2, res=3, max_rounds=1)
+    finally:
+        nno.SCAN_MAX_QUERIES = scan_max
     sections.append((
         "knn_join ring round (large query side)",
         "Per-round state is fully distributed: the done-set is an "

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geographiclib_go_spark.operators import clustering as cl
+from geographiclib_go_spark.operators import nearest as nn
 
 SPHERE_A = 6371000.0
 
@@ -55,13 +56,13 @@ def _ref_dbscan(ids, lat, lon, eps_m, min_pts):
     return out
 
 
-def _run(spark, ids, lat, lon, eps_m, min_pts, **kw):
+def _run(spark, ids, lat, lon, eps_m, min_pts):
     df = spark.createDataFrame(
         [(int(i), float(la), float(lo))
          for i, la, lo in zip(ids, lat, lon)],
         "id long, lat double, lon double")
     got = cl.dbscan(df, eps_m, min_pts, id_col="id",
-                    a=SPHERE_A, f=0.0, **kw)
+                    a=SPHERE_A, f=0.0)
     return {int(r["id"]):
             (r["role"],
              None if r["cluster_id"] is None else int(r["cluster_id"]))
@@ -162,7 +163,7 @@ def test_query_role_mix_at_gate_sf(spark):
                        & (F.col("cluster_id") != -1)).count() == 0)
 
 
-def test_cover_strategy_matches_scan(spark):
+def test_cover_strategy_matches_scan(spark, monkeypatch):
     """The eps-adaptive symmetric celled self-join (eps_self_edges,
     VERDICT r3 item 5) must produce the identical clustering as the
     closure-scan strategy on the same input."""
@@ -173,6 +174,8 @@ def test_cover_strategy_matches_scan(spark):
         lat = rng.uniform(-65, 65, n)
         lon = rng.uniform(-179, 179, n)
         eps = _clear_eps(lat, lon, target)
-        got_scan = _run(spark, ids, lat, lon, eps, 3, strategy="scan")
-        got_cover = _run(spark, ids, lat, lon, eps, 3, strategy="cover")
+        got_scan = _run(spark, ids, lat, lon, eps, 3)
+        with monkeypatch.context() as m:
+            m.setattr(nn, "SCAN_MAX_QUERIES", 0)  # force the cover
+            got_cover = _run(spark, ids, lat, lon, eps, 3)
         assert got_cover == got_scan

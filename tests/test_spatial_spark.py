@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from geographiclib_go_spark.kernels import caps as C
 from geographiclib_go_spark.kernels import inverse as kinverse
 from geographiclib_go_spark.kernels.geodesic import wgs84_model
+from geographiclib_go_spark.operators import nearest as nn
 from geographiclib_go_spark.operators import spatial_join as sj
 from geographiclib_go_spark.operators import tiling
 from geographiclib_go_spark.operators import pip as kpip
@@ -236,15 +237,15 @@ def test_images_source_invariants(spark):
     assert len(hot) >= 10
 
 
-def test_knn_strategies_agree(spark, points_df, queries_pdf):
-    """scan_topk (single-scan partial top-k) and ring expansion must
+def test_knn_strategies_agree(spark, points_df, queries_pdf, monkeypatch):
+    """scan (single-scan partial top-k) and ring expansion must
     return the same per-query distance sets."""
     k = 3
     qdf = spark.createDataFrame(queries_pdf.head(8))
-    a = sj.knn_join(points_df, qdf, k=k, res=4,
-                    strategy="scan_topk").select(
+    a = nn.knn_points_topk(points_df, qdf, k=k).select(
         "q_qid", "pid", "s12").toPandas()
-    b = sj.knn_join(points_df, qdf, k=k, res=4, strategy="ring").select(
+    monkeypatch.setattr(nn, "SCAN_MAX_QUERIES", 0)  # force the ring
+    b = sj.knn_join(points_df, qdf, k=k, res=4).select(
         "q_qid", "pid", "s12").toPandas()
     assert len(a) == len(b) == 8 * k
     for qid in a.q_qid.unique():
@@ -253,16 +254,16 @@ def test_knn_strategies_agree(spark, points_df, queries_pdf):
         np.testing.assert_array_equal(da, db)
 
 
-def test_distance_strategies_agree(spark, points_df, queries_pdf):
+def test_distance_strategies_agree(spark, points_df, queries_pdf,
+                                   monkeypatch):
     """scan (map-only chord prefilter) and cover (cell equi-join) must
     produce the identical pair set with identical distances."""
     radius = 800e3
     qdf = spark.createDataFrame(queries_pdf)
-    a = sj.distance_join(points_df, qdf, radius,
-                         strategy="scan").select(
+    a = nn.radius_dim_join(points_df, qdf, radius).select(
         "q_qid", "pid", "s12").toPandas()
-    b = sj.distance_join(points_df, qdf, radius,
-                         strategy="cover").select(
+    monkeypatch.setattr(nn, "SCAN_MAX_QUERIES", 0)  # force the cover
+    b = sj.distance_join(points_df, qdf, radius).select(
         "q_qid", "pid", "s12").toPandas()
     pa = {(r.q_qid, r.pid): r.s12 for r in a.itertuples()}
     pb = {(r.q_qid, r.pid): r.s12 for r in b.itertuples()}
@@ -305,8 +306,7 @@ def test_knn_ring_large_query_side(spark):
         "lon": rng.uniform(-180, 180, n_q)})
     pts = spark.createDataFrame(ppdf).repartition(8)
     qdf = spark.createDataFrame(qpdf).repartition(8)
-    got = sj.knn_join(pts, qdf, k=k, a=R, f=0.0,
-                      strategy="auto").select(
+    got = sj.knn_join(pts, qdf, k=k, a=R, f=0.0).select(
         "q_qid", "pid", "s12").toPandas()
     assert len(got) == n_q * k
     # closed-form great-circle oracle, chunked matmul
@@ -336,10 +336,9 @@ def test_knn_rejects_duplicate_query_ids(spark, points_df, queries_pdf):
     qdup = pd.concat([queries_pdf.head(6)] * 2, ignore_index=True)
     qdf = spark.createDataFrame(qdup)
     with pytest.raises(Exception, match="unique"):
-        sj.knn_join(points_df, qdf, k=2, res=4,
-                    strategy="ring").collect()
+        sj.knn_join(points_df, qdf, k=2, res=4).collect()
     with pytest.raises(ValueError, match="unique"):
-        sj.knn_join(points_df, qdf, k=2, strategy="scan_topk")
+        nn.knn_points_topk(points_df, qdf, k=2)
 
 
 def test_distance_join_duplicate_ids_fall_back_to_cover(
@@ -366,8 +365,52 @@ def test_distance_join_duplicate_ids_fall_back_to_cover(
 def test_radius_scan_rejects_duplicate_ids(spark, points_df, queries_pdf):
     qdup = pd.concat([queries_pdf.head(6)] * 2, ignore_index=True)
     with pytest.raises(ValueError, match="unique"):
-        sj.distance_join(points_df, spark.createDataFrame(qdup), 500e3,
-                         strategy="scan")
+        nn.radius_dim_join(points_df, spark.createDataFrame(qdup), 500e3)
+
+
+def test_small_query_side_read_once(spark, points_df, queries_pdf):
+    """distance_join and knn_join pick the plan from one bounded read
+    of a small query side and hand those rows to the scan: building
+    either (no action) runs at most one Spark job, that read."""
+    qdf = spark.createDataFrame(queries_pdf.head(8))
+    sc = spark.sparkContext
+    for name, build in (
+            ("distance", lambda: sj.distance_join(points_df, qdf, 500e3)),
+            ("knn", lambda: sj.knn_join(points_df, qdf, k=2))):
+        group = f"small-side-read-once-{name}"
+        sc.setJobGroup(group, "build only")
+        try:
+            build()
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 1, (name, list(jobs))
+
+
+def test_distance_join_null_query_id_takes_cover(spark, points_df):
+    """A query side with a null id is not scanned (the scan re-joins
+    on the id); the cover path keeps every row, the null-id row's
+    matches included."""
+    rows = [(0, 40.0, -74.0), (1, -33.9, 151.2), (None, 51.5, -0.1),
+            (3, 0.0, 179.999), (4, 89.99, 10.0)]
+    qdf = spark.createDataFrame(rows, "qid long, lat double, lon double")
+    radius = 800e3
+    out = sj.distance_join(points_df, qdf, radius)
+    assert "MapInPandas" not in out._jdf.queryExecution() \
+        .executedPlan().toString()
+    pairs = out.select("q_qid", "pid").toPandas()
+    got = {(None if pd.isna(r.q_qid) else int(r.q_qid), int(r.pid))
+           for r in pairs.itertuples()}
+    assert len(got) == len(pairs)
+    ppdf = _points_pdf(4000)
+    want = set()
+    for qid, la, lo in rows:
+        s12 = kinverse.inverse(
+            G, np.full(len(ppdf), la), np.full(len(ppdf), lo),
+            ppdf.lat.to_numpy(), ppdf.lon.to_numpy(), C.DISTANCE)["s12"]
+        want |= {(qid, int(p)) for p in ppdf.pid.to_numpy()[s12 <= radius]}
+    assert got == want
+    assert any(q is None for q, _ in got)
 
 
 def test_route_distance_kernel_properties(spark):
@@ -665,7 +708,7 @@ def test_route_intersections_sphere_operator(spark):
         assert d_in[0, 0] < 1e-6
 
 
-def test_knn_auto_res_requires_stats_or_exact_count(spark):
+def test_knn_auto_res_requires_stats_or_exact_count(spark, monkeypatch):
     """When the points side exposes no parquet footer stats AND the
     bounded probe saturates (row count only a lower bound), auto
     resolution must refuse with a clear error instead of scanning the
@@ -679,9 +722,10 @@ def test_knn_auto_res_requires_stats_or_exact_count(spark):
                       "lat": [10.0, -20.0], "lon": [30.0, 100.0]}))
     n, exact = sj._estimate_row_count(big)
     assert not exact and n == (1 << 18)
+    monkeypatch.setattr(nn, "SCAN_MAX_QUERIES", 0)  # force the ring
     with pytest.raises(ValueError, match="pass res"):
-        sj.knn_join(big, qdf, k=2, strategy="ring")
-    out = sj.knn_join(big, qdf, k=2, res=3, strategy="ring")
+        sj.knn_join(big, qdf, k=2)
+    out = sj.knn_join(big, qdf, k=2, res=3)
     assert out.count() == 4
 
 

@@ -51,7 +51,7 @@ a driver-side union-find (tests/test_components.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -168,9 +168,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     are not emitted (callers left-join and coalesce(component_id, id)
     if they want total coverage — see image_dup_components).
 
-    strategy: 'auto' counts the deduplicated edge list (a count over
-    the already-materialized checkpoint — no extra scan of the
-    input) and dispatches: <= local_threshold edges (~16 B/edge, so
+    strategy: 'auto' counts the deduplicated edge list (observed
+    while the checkpoint materializes — no extra job) and
+    dispatches: <= local_threshold edges (~16 B/edge, so
     ~32 MB at the default — one comfortable task) runs the exact
     single-job numpy closure; larger graphs run the distributed
     star alternation.  'star' / 'local' force a path (tests and
@@ -184,13 +184,15 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     """
     if strategy not in ("auto", "star", "local"):
         raise ValueError(f"unknown strategy {strategy!r}")
+    n_edges = Observation()
     edges = (pairs.select(F.col(id_a).cast("long").alias("id_a"),
                           F.col(id_b).cast("long").alias("id_b"))
              .filter(F.col("id_a") != F.col("id_b"))
              .distinct()
+             .observe(n_edges, F.count(F.lit(1)).alias("n"))
              .localCheckpoint(eager=True))
     if strategy == "auto":
-        strategy = ("local" if edges.count() <= local_threshold
+        strategy = ("local" if n_edges.get["n"] <= local_threshold
                     else "star")
     if strategy == "local":
         out = edges.coalesce(1).mapInPandas(

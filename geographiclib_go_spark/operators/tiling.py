@@ -45,13 +45,16 @@ def detect_hot_keys(df: DataFrame, key: str,
                     min_rows: int = 10_000) -> list:
     """Scout pass: keys holding more than threshold_ratio of all rows
     (and at least min_rows).  Returns the hot key values (driver-side
-    list — hot keys are few by definition)."""
-    total = df.count()
-    thresh = max(int(total * threshold_ratio), min_rows)
-    rows = (df.groupBy(key).count()
-            .filter(F.col("count") >= thresh)
-            .select(key).collect())
-    return [r[0] for r in rows]
+    list — hot keys are few by definition).  One action: the group
+    counts give the total as well as the candidates (groups of at
+    least min_rows); the ratio threshold is applied on the driver."""
+    counts = df.groupBy(key).count()
+    total, cand = counts.agg(
+        F.sum("count"),
+        F.collect_list(F.when(F.col("count") >= min_rows,
+                              F.struct(key, "count")))).collect()[0]
+    thresh = max(int((total or 0) * threshold_ratio), min_rows)
+    return [k for k, n in cand if n >= thresh]
 
 
 def salt_hot_keys(df: DataFrame, key: str, hot_keys: list,

@@ -1,27 +1,39 @@
-"""Checkpointed, VERSIONED stage snapshots with per-partition lineage
-+ metrics (north rule: any stage resumes idempotently).
+"""Checkpointed, VERSIONED stage snapshots with lineage + metrics
+(north rule: any stage resumes idempotently).
 
 Storage abstraction: Iceberg when a catalog is configured, else plain
 parquet directories with Iceberg-SHAPED commit semantics — a stage is
 a pointer to an immutable snapshot, every write creates a NEW
 snapshot, and commit is an atomic pointer swap (SURVEY.md §7 risk 4):
 
-  <root>/<stage>/snapshots/v00001/data/      immutable stage output
-  <root>/<stage>/snapshots/v00001/_lineage/  (partition_id, rows,
-                                             checksum) sidecar
-  <root>/<stage>/snapshots/v00001/commit.json  per-snapshot metrics
-  <root>/<stage>/_CURRENT                    atomic pointer (rename)
-  <root>/<stage>/_staging/<pid>-<uuid>/      writer-private scratch;
-                                             published into snapshots/
-                                             by ONE atomic dir rename
+  <root>/<stage>/snapshots/v00001/data/        immutable stage output
+  <root>/<stage>/snapshots/v00001/commit.json  metrics + lineage
+  <root>/<stage>/_CURRENT                      atomic pointer (rename),
+                                               a copy of commit.json
+  <root>/<stage>/_staging/<pid>-<uuid>/        writer-private scratch;
+                                               published into snapshots/
+                                               by ONE atomic dir rename
+
+commit.json carries, besides the input fingerprint and timings:
+
+- ``rows`` and ``checksum``: the row count and the order-insensitive
+  xor of row hashes (``_row_hash``), observed while the data was
+  written — the write is the stage's only Spark job;
+- ``schema``: the written schema (``DataFrame.schema.json()``), which
+  every read applies, so a read infers nothing and runs no job, and
+  hive partition columns come back with their written types;
+- ``files``: each data file's path (relative to ``data/``) and byte
+  size, which a resume checks against the filesystem.
 
 This buys, with plain files, the Iceberg guarantees the engine
 depends on:
 
 - resume:     ``run_stage`` short-circuits when the CURRENT snapshot
-              carries the same input fingerprint — reruns are
-              metadata no-ops; a crashed run never half-overwrites a
-              committed snapshot (writes go to a new version dir).
+              carries the same input fingerprint and its data files
+              are exactly the committed ones — reruns are metadata
+              no-ops; a crashed run never half-overwrites a committed
+              snapshot (writes go to a new version dir); a truncated,
+              deleted or stray data file makes the stage rebuild.
 - time travel: ``read_stage(..., version=n)`` reads any retained
               snapshot; ``snapshot_history`` lists them.
 - rollback:   ``rollback_stage`` repoints CURRENT to an older
@@ -29,8 +41,11 @@ depends on:
 - retention:  ``expire_snapshots`` prunes old versions (never the
               current one).
 
-The per-partition checksums (order-insensitive xor of row hashes) let
-a verifier detect partial/corrupt outputs without reading full data.
+``verify_stage`` recomputes (rows, checksum) from the data and
+compares them with the commit, which detects changed values as well
+as lost rows.  A commit.json without rows/checksum/schema/files was
+written by an older version of this module; such a stage counts as
+not complete and rebuilds once.
 """
 
 from __future__ import annotations
@@ -43,8 +58,11 @@ import time
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from geographiclib_go_spark.functions.localdf import literal_df
 
 
 def _stage_base(root: str, stage: str) -> str:
@@ -53,7 +71,7 @@ def _stage_base(root: str, stage: str) -> str:
 
 def _staging_dir(root: str, stage: str) -> str:
     """A writer-unique scratch directory for one in-flight snapshot.
-    Everything (data, _lineage, commit.json) is assembled here and
+    Everything (data, commit.json) is assembled here and
     published into snapshots/ with ONE atomic directory rename, so a
     version directory under snapshots/ is complete by construction
     and two concurrent writers can never touch the same path."""
@@ -97,49 +115,104 @@ def snapshot_history(root: str, stage: str) -> list:
     return out
 
 
+def _row_hash(df: DataFrame):
+    """xxhash64 over the columns in name order: the one row hash of
+    every checksum here, so a checksum does not depend on the column
+    order a hive-partitioned read introduces."""
+    return F.xxhash64(*[F.col(c) for c in sorted(df.columns)])
+
+
+def _lineage_aggs(df: DataFrame) -> list:
+    """(rows, checksum) aggregates over `df`; the checksum is an xor
+    fold (associative, commutative, overflow-free) of row hashes, so
+    it is stable under repartitioning and row order."""
+    return [F.count(F.lit(1)).alias("rows"),
+            F.bit_xor(_row_hash(df)).alias("checksum")]
+
+
 def partition_lineage(df: DataFrame) -> DataFrame:
-    """(partition_id, rows, checksum) — checksum is an order-
-    insensitive xor-of-row-hashes so it is stable under shuffle
-    nondeterminism inside a partition."""
-    h = F.xxhash64(*[F.col(c) for c in df.columns])
-    return (df
-            .withColumn("_pid", F.spark_partition_id())
-            .withColumn("_h", h)
-            .groupBy("_pid")
-            .agg(F.count("*").alias("rows"),
-                 # xor fold: associative, commutative, overflow-free
-                 F.expr("bit_xor(_h)").alias("checksum"))
-            .withColumnRenamed("_pid", "partition_id"))
+    """(partition_id, rows, checksum) per partition of `df`; the rows
+    sum and the checksums xor to the stage totals in commit.json."""
+    return (df.withColumn("partition_id", F.spark_partition_id())
+            .groupBy("partition_id")
+            .agg(*_lineage_aggs(df)))
+
+
+def _snapshot_meta(root: str, stage: str, version: int = None) -> dict:
+    """commit.json of a retained snapshot, or the CURRENT pointer's
+    copy of it when `version` is None."""
+    if version is None:
+        cur = current_snapshot(root, stage)
+        if cur is None:
+            raise FileNotFoundError(f"stage {stage!r} has no committed "
+                                    f"snapshot under {root}")
+        return cur
+    with open(os.path.join(_snap_dir(root, stage, version),
+                           "commit.json")) as fh:
+        return json.load(fh)
+
+
+def _file_sizes(data_dir: str) -> dict:
+    """{path relative to data_dir: bytes} of every data file."""
+    return {os.path.relpath(f, data_dir): os.path.getsize(f)
+            for f in _data_files(data_dir)}
+
+
+def _intact(root: str, stage: str, meta: dict) -> bool:
+    """The commit carries its lineage, and its data directory holds
+    exactly the committed files at their committed sizes (a truncated,
+    deleted or stray file fails) — a listing and a stat per file, no
+    data read."""
+    if not all(k in meta for k in ("rows", "checksum", "schema", "files")):
+        return False
+    data_dir = os.path.join(_snap_dir(root, stage, meta["version"]), "data")
+    return _file_sizes(data_dir) == meta["files"]
 
 
 def stage_is_complete(root: str, stage: str,
                       input_fingerprint: str = "") -> bool:
     cur = current_snapshot(root, stage)
     return (cur is not None
-            and cur.get("input_fingerprint", "") == input_fingerprint)
+            and cur.get("input_fingerprint", "") == input_fingerprint
+            and _intact(root, stage, cur))
 
 
 def read_stage(spark: SparkSession, root: str, stage: str,
                version: int = None) -> DataFrame:
     """Stage output — the current snapshot, or any retained version
-    (time travel)."""
-    if version is None:
-        cur = current_snapshot(root, stage)
-        if cur is None:
-            raise FileNotFoundError(f"stage {stage!r} has no committed "
-                                    f"snapshot under {root}")
-        version = cur["version"]
-    return spark.read.parquet(
-        os.path.join(_snap_dir(root, stage, version), "data"))
+    (time travel) — read with its committed schema (no inference
+    job)."""
+    meta = _snapshot_meta(root, stage, version)
+    schema = StructType.fromJson(json.loads(meta["schema"]))
+    return spark.read.schema(schema).parquet(
+        os.path.join(_snap_dir(root, stage, meta["version"]), "data"))
 
 
 def read_lineage(spark: SparkSession, root: str, stage: str,
                  version: int = None) -> DataFrame:
-    if version is None:
-        cur = current_snapshot(root, stage)
-        version = cur["version"] if cur else 1
-    return spark.read.parquet(
-        os.path.join(_snap_dir(root, stage, version), "_lineage"))
+    """The committed lineage as one (partition_id, rows, checksum)
+    row, built from commit.json."""
+    meta = _snapshot_meta(root, stage, version)
+    return literal_df(spark, [(0, meta["rows"], meta["checksum"])],
+                      "partition_id int, rows long, checksum long")
+
+
+def _commit_meta(stage: str, input_fingerprint: str, t0: float,
+                 data_dir: str, rows: int, checksum: int,
+                 schema: str) -> dict:
+    files = _file_sizes(data_dir)
+    return {
+        "stage": stage,
+        "rows": rows,
+        # bit_xor over no rows is null; the empty xor is 0
+        "checksum": checksum or 0,
+        "schema": schema,
+        "files": files,
+        "wall_s": round(time.time() - t0, 3),
+        "input_fingerprint": input_fingerprint,
+        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "n_files": len(files),
+    }
 
 
 def run_stage(spark: SparkSession, root: str, stage: str,
@@ -148,11 +221,13 @@ def run_stage(spark: SparkSession, root: str, stage: str,
               partition_by: list = None) -> DataFrame:
     """Execute (or resume) one pipeline stage.
 
-    If the CURRENT snapshot committed with the same input fingerprint,
-    its data is returned without recompute.  Otherwise build() is
-    written into a writer-unique STAGING directory (data + lineage +
-    commit metadata) and published into snapshots/ with one atomic
-    directory rename before the CURRENT pointer swaps — concurrent
+    If the CURRENT snapshot committed with the same input fingerprint
+    and its data files are intact, its data is returned without
+    recompute.  Otherwise build() is written into a writer-unique
+    STAGING directory (data + commit metadata, with the row count and
+    checksum observed during the write: one Spark job) and published
+    into snapshots/ with one atomic directory rename before the
+    CURRENT pointer swaps — concurrent
     readers of the old snapshot are never disturbed, a crash before
     publish leaves only staging scratch (swept by expire_snapshots),
     and CONCURRENT writers of the same stage are safe: each assembles
@@ -167,27 +242,16 @@ def run_stage(spark: SparkSession, root: str, stage: str,
 
     t0 = time.time()
     df = build()
-    writer = df.write.mode("overwrite")
+    # unnamed: concurrent writers each get their own observation
+    obs = Observation()
+    writer = df.observe(obs, *_lineage_aggs(df)).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(os.path.join(staging, "data"))
-
-    staged = spark.read.parquet(os.path.join(staging, "data"))
-    lin = partition_lineage(staged)
-    lin.write.mode("overwrite").parquet(
-        os.path.join(staging, "_lineage"))
-    rows = staged.count()
-    meta = {
-        "stage": stage,
-        "rows": rows,
-        "wall_s": round(time.time() - t0, 3),
-        "input_fingerprint": input_fingerprint,
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        # committed data-file count, from the filesystem listing —
-        # no df.rdd conversion (a driver-side RDD materialization)
-        # on the write path
-        "n_files": len(_data_files(os.path.join(staging, "data"))),
-    }
+    data_dir = os.path.join(staging, "data")
+    writer.parquet(data_dir)
+    lin = obs.get
+    meta = _commit_meta(stage, input_fingerprint, t0, data_dir,
+                        lin["rows"], lin["checksum"], df.schema.json())
     version = _publish_snapshot(root, stage, staging, meta)
     return read_stage(spark, root, stage, version=version)
 
@@ -251,13 +315,10 @@ def _data_files(path: str) -> list:
 
 
 def _global_checksum(df: DataFrame):
-    """Order-insensitive xor-of-row-hashes over name-sorted columns —
-    invariant under repartitioning AND under the column reordering a
-    hive-partitioned read introduces."""
-    cols = sorted(df.columns)
-    return (df.select(F.xxhash64(*[F.col(c) for c in cols])
-                      .alias("_h"))
-            .agg(F.expr("bit_xor(_h)")).collect()[0][0])
+    """The xor of `_row_hash` over all of `df` — the checksum
+    commit.json records, invariant under repartitioning AND under the
+    column reordering a hive-partitioned read introduces."""
+    return df.agg(F.bit_xor(_row_hash(df))).collect()[0][0]
 
 
 def compact_stage(spark: SparkSession, root: str, stage: str,
@@ -293,7 +354,7 @@ def compact_stage(spark: SparkSession, root: str, stage: str,
     old_dir = os.path.join(_snap_dir(root, stage, cur["version"]),
                            "data")
     old_files = _data_files(old_dir)
-    df = spark.read.parquet(old_dir)
+    df = read_stage(spark, root, stage, version=cur["version"])
     derived = target_files is None
     if derived:
         total = sum(os.path.getsize(f) for f in old_files)
@@ -335,21 +396,12 @@ def compact_stage(spark: SparkSession, root: str, stage: str,
             f"compaction of {stage!r} v{cur['version']} changed data "
             f"(rows {old_count}->{rows}, checksum {old_sum}->{new_sum})"
             f"; staging dir left unpublished")
-    lin = partition_lineage(out)
-    lin.write.mode("overwrite").parquet(
-        os.path.join(staging, "_lineage"))
-    n_files = len(_data_files(os.path.join(staging, "data")))
-    meta = {
-        "stage": stage,
-        "rows": rows,
-        "wall_s": round(time.time() - t0, 3),
-        "input_fingerprint": cur.get("input_fingerprint", ""),
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "n_files": n_files,
-        "compacted_from": cur["version"],
-        "files_before": len(old_files),
-        "files_after": n_files,
-    }
+    meta = _commit_meta(stage, cur.get("input_fingerprint", ""), t0,
+                        os.path.join(staging, "data"), rows, new_sum,
+                        cur["schema"])
+    meta.update(compacted_from=cur["version"],
+                files_before=len(old_files),
+                files_after=meta["n_files"])
     _publish_snapshot(root, stage, staging, meta)
     return meta
 
@@ -357,10 +409,7 @@ def compact_stage(spark: SparkSession, root: str, stage: str,
 def rollback_stage(root: str, stage: str, version: int) -> dict:
     """Repoint CURRENT at an older retained snapshot (one atomic
     rename, no data movement) and return its metadata."""
-    meta_path = os.path.join(_snap_dir(root, stage, version),
-                             "commit.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
+    meta = _snapshot_meta(root, stage, version)
     ptr = _pointer_path(root, stage)
     tmp = ptr + f".tmp.rb{version}"
     with open(tmp, "w") as fh:
@@ -421,10 +470,14 @@ def expire_snapshots(root: str, stage: str, keep: int = 2,
 
 
 def verify_stage(spark: SparkSession, root: str, stage: str) -> bool:
-    """Recompute row totals of the current stage output and compare
-    with the lineage sidecar (corruption / partial-write detector
-    used before resume)."""
-    data = read_stage(spark, root, stage)
-    stored_rows = read_lineage(spark, root, stage) \
-        .agg(F.sum("rows")).collect()[0][0]
-    return data.count() == (stored_rows or 0)
+    """Recompute (rows, checksum) of the current stage output in one
+    aggregate and compare them with the commit (a corruption /
+    partial-write detector that sees changed values, not only a
+    changed count)."""
+    cur = current_snapshot(root, stage)
+    if cur is None or not _intact(root, stage, cur):
+        return False
+    data = read_stage(spark, root, stage, version=cur["version"])
+    got = data.agg(*_lineage_aggs(data)).collect()[0]
+    return (got["rows"], got["checksum"] or 0) == \
+        (cur["rows"], cur["checksum"])

@@ -106,7 +106,9 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
         from geographiclib_go_spark.operators import components as cc
         from geographiclib_go_spark.operators import dedup as ded
         from geographiclib_go_spark.operators import sampling as smp
-        keep = (images.groupBy("phash")
+        # tiles holds the same (image_id, phash) rows as images; staged,
+        # it is a snapshot read, not another image-generation pass
+        keep = (tiles.select("image_id", "phash").groupBy("phash")
                 .agg(F.min("image_id").alias("image_id")))
         pairs = ded.hamming_band_pairs(keep.select("phash"),
                                        sig_col="phash", id_col="phash",

@@ -33,7 +33,7 @@ def test_concurrent_writers_same_stage(spark):
     """Two threads race run_stage on the same fresh stage with the
     same fingerprint: both must return fully-readable data, every
     published snapshot must be complete (commit.json + readable
-    parquet + lineage sidecar), and the stage must resume as a no-op
+    parquet + committed lineage), and the stage must resume as a no-op
     afterwards."""
     with tempfile.TemporaryDirectory() as root:
         barrier = threading.Barrier(2)
@@ -62,7 +62,7 @@ def test_concurrent_writers_same_stage(spark):
         assert results == {"a": 500, "b": 500}
 
         # every snapshot directory is complete: commit.json present,
-        # data readable, lineage sidecar consistent
+        # data readable, committed lineage consistent
         snaps = os.path.join(root, "race", "snapshots")
         names = sorted(os.listdir(snaps))
         assert len(names) >= 1

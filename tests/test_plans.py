@@ -2,7 +2,9 @@
 small sides broadcast, bytes columns are pruned, and the lineage
 store resumes idempotently."""
 
+import json
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -85,9 +87,136 @@ def test_lineage_resume_is_noop(spark):
                           input_fingerprint="fp2")
         assert calls["n"] == 2
         assert lineage.verify_stage(spark, root, "s1")
-        # lineage sidecar exists with per-partition rows
+        # the committed lineage carries the row count
         lin = lineage.read_lineage(spark, root, "s1")
         assert lin.agg(F.sum("rows")).collect()[0][0] == 100
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs `fn` runs, counted in a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_commit_is_one_job_resume_is_none(spark):
+    """A stage commit is its data write alone (rows and checksum are
+    observed during it), and a resume reads with the committed schema,
+    so it runs no job at all."""
+    with tempfile.TemporaryDirectory() as root:
+        def run():
+            return lineage.run_stage(
+                spark, root, "s", lambda: spark.range(0, 1000, 1, 4),
+                input_fingerprint="fp1")
+
+        built = _jobs_in_group(spark, "commit-one-job-build", run)
+        assert len(built) == 1, built
+        resumed = _jobs_in_group(spark, "commit-one-job-resume", run)
+        assert resumed == [], resumed
+        assert len(lineage.snapshot_history(root, "s")) == 1
+
+
+@pytest.mark.parametrize("partition_by", [None, ["k"]])
+def test_commit_lineage_equals_reread(spark, partition_by):
+    """commit.json's rows and checksum, observed during the write,
+    equal what a re-read of the committed data recomputes — also for
+    a hive-partitioned stage, whose partition column comes back last
+    and with its written type — and read_lineage reports them."""
+    with tempfile.TemporaryDirectory() as root:
+        df = lineage.run_stage(
+            spark, root, "s",
+            lambda: spark.range(0, 5000, 1, 6).select(
+                "id", (F.col("id") % 5).alias("k"),
+                (F.col("id") * 0.5).alias("x")),
+            input_fingerprint="fp1", partition_by=partition_by)
+        cur = lineage.current_snapshot(root, "s")
+        assert df.schema["k"].dataType.simpleString() == "bigint"
+
+        def totals(lin):
+            r = lin.agg(F.sum("rows"), F.bit_xor("checksum")).collect()[0]
+            return r[0], r[1]
+        want = (cur["rows"], cur["checksum"])
+        assert want[0] == 5000
+        assert totals(lineage.partition_lineage(
+            lineage.read_stage(spark, root, "s"))) == want
+        assert totals(lineage.read_lineage(spark, root, "s")) == want
+        assert lineage._global_checksum(df) == cur["checksum"]
+
+
+@pytest.mark.parametrize("damage", ["truncate", "delete", "drop_version"])
+def test_resume_rebuilds_damaged_snapshot(spark, damage):
+    """A resume checks the committed file list and sizes: a truncated
+    or deleted data file in the CURRENT snapshot, or a pointer that
+    names a missing version, is not served — the stage is built again
+    and published as a new version."""
+    with tempfile.TemporaryDirectory() as root:
+        calls = {"n": 0}
+
+        def build():
+            calls["n"] += 1
+            return spark.range(0, 1000, 1, 4)
+
+        lineage.run_stage(spark, root, "s", build, input_fingerprint="fp1")
+        data_dir = os.path.join(root, "s", "snapshots", "v00001", "data")
+        victim = os.path.join(data_dir, sorted(
+            f for f in os.listdir(data_dir) if f.endswith(".parquet"))[0])
+        if damage == "truncate":
+            with open(victim, "r+b") as fh:
+                fh.truncate(os.path.getsize(victim) // 2)
+        elif damage == "delete":
+            os.remove(victim)
+        else:
+            shutil.rmtree(os.path.dirname(data_dir))
+        assert not lineage.stage_is_complete(root, "s", "fp1")
+
+        df = lineage.run_stage(spark, root, "s", build,
+                               input_fingerprint="fp1")
+        assert calls["n"] == 2
+        assert lineage.current_snapshot(root, "s")["version"] == 2
+        assert df.count() == 1000
+        assert lineage.stage_is_complete(root, "s", "fp1")
+
+
+def test_verify_stage_detects_changed_value(spark):
+    """verify_stage compares the recomputed checksum, not only the row
+    count: a data file rewritten with the same rows but one changed
+    value (and its committed size patched to match, so only the
+    values differ) fails verification."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    with tempfile.TemporaryDirectory() as root:
+        lineage.run_stage(
+            spark, root, "s",
+            lambda: spark.range(0, 1000, 1, 4).withColumn(
+                "v", F.col("id") * 2),
+            input_fingerprint="fp1")
+        assert lineage.verify_stage(spark, root, "s")
+        cur = lineage.current_snapshot(root, "s")
+        snap = os.path.join(root, "s", "snapshots", "v00001")
+        rel = sorted(f for f in os.listdir(os.path.join(snap, "data"))
+                     if f.endswith(".parquet"))[0]
+        path = os.path.join(snap, "data", rel)
+        table = pq.read_table(path)
+        v = table.column("v")
+        table = table.set_column(table.schema.get_field_index("v"), "v",
+                                 pc.add(v, 1))
+        pq.write_table(table, path)
+        # the local filesystem's checksum sidecar would flag the edit
+        crc = os.path.join(os.path.dirname(path), f".{rel}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        assert pq.read_metadata(path).num_rows == table.num_rows
+        cur["files"][rel] = os.path.getsize(path)
+        for meta_path in (os.path.join(snap, "commit.json"),
+                          os.path.join(root, "s", "_CURRENT")):
+            with open(meta_path, "w") as fh:
+                json.dump(cur, fh)
+        assert lineage.read_stage(spark, root, "s").count() == 1000
+        assert not lineage.verify_stage(spark, root, "s")
 
 
 def test_lineage_time_travel_rollback_expire(spark):

@@ -170,6 +170,14 @@ def test_salting_spreads_hot_keys(spark):
     hot = tiling.detect_hot_keys(df, "k", threshold_ratio=0.01,
                                  min_rows=100)
     assert hot == [1]
+    # key 2 (300 rows) clears min_rows but not 1% of 60,000 rows:
+    # total * threshold_ratio, not min_rows, sets the threshold
+    ids = F.col("id")
+    df_r = spark.range(60_000).select(
+        F.when(ids < 1000, 1).when(ids < 1300, 2).otherwise(ids)
+        .alias("k"))
+    assert tiling.detect_hot_keys(df_r, "k", threshold_ratio=0.01,
+                                  min_rows=100) == [1]
     salted = tiling.salt_hot_keys(df, "k", hot, salt_factor=8)
     n_salted = (salted.filter(F.col("k") == 1)
                 .select("salted_key").distinct().count())

@@ -78,16 +78,6 @@ class RhumbModel:
 WGS84 = RhumbModel()
 
 
-def _eatanhe(x, es):
-    """e * atanh(e * x) continued analytically to prolate (es < 0),
-    where it becomes -sqrt(-e2) * atan(sqrt(-e2) * x)."""
-    if es > 0:
-        return es * np.arctanh(es * x)
-    if es < 0:
-        return -es * np.arctan(-es * x)
-    return np.zeros_like(np.asarray(x, dtype=np.float64))
-
-
 def mu_from_phi(r: RhumbModel, phi):
     """Rectifying series argument: meridian_dist(phi) / A."""
     out = np.asarray(phi, dtype=np.float64).copy()

@@ -30,18 +30,19 @@ iterative DataFrame plans otherwise accrete lineage until Catalyst
 analysis itself becomes the bottleneck (the classic iterative-Spark
 failure mode).
 
-Strategy ('auto', the default): near-dup pair lists are usually a
-small fraction of the corpus (the dedup operators emit candidates,
-not the cross product), so when the deduplicated edge list fits one
-task (<= local_threshold edges, ~32 MB at the default) the closure
-runs as a SINGLE single-partition mapInPandas pass — vectorized
-numpy min-label propagation with pointer-jumping, one Spark job, no
-iteration-driving driver loop — the same measured-size dispatch the
-spatial joins use (spatial_join.py: the query side picks the plan).
-Above the threshold it is the distributed star alternation.  Both paths
-produce the identical (id, component_id = component minimum)
-labeling and are parity-tested against each other and a union-find
-reference (tests/test_components.py).
+Path choice: the observed edge count alone picks the plan.  Near-dup
+pair lists are usually a small fraction of the corpus (the dedup
+operators emit candidates, not the cross product), so when the
+deduplicated edge list fits one task (<= LOCAL_MAX_EDGES edges,
+~32 MB) the closure runs as a SINGLE single-partition mapInPandas
+pass — vectorized numpy min-label propagation with pointer-jumping,
+one Spark job, no iteration-driving driver loop — the same
+measured-size dispatch the spatial joins use (spatial_join.py: the
+query side picks the plan).  Above it is the distributed star
+alternation.  Both paths produce the identical (id, component_id =
+component minimum) labeling and are parity-tested against each other
+and a union-find reference (tests/test_components.py, which forces a
+path by patching the constant).
 
 Verification: the DuckDB oracle recomputes components from the SAME
 pair set by recursive-CTE min-label closure (queries.py
@@ -53,6 +54,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+LOCAL_MAX_EDGES = 2_000_000  # ~16 B/edge: ~32 MB, one comfortable task
+MAX_ROUNDS = 20  # O(log^2 n) rounds: covers any storable graph
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -156,34 +160,21 @@ def _local_closure(it):
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_iter: int = 20,
-                         with_stats: bool = False,
-                         strategy: str = "auto",
-                         local_threshold: int = 2_000_000):
+                         id_b: str = "id_b", with_stats: bool = False):
     """(id, component_id) for every node appearing in `pairs`, where
     component_id is the minimum node id of its connected component.
 
     Nodes never mentioned in a pair are singletons by definition and
     are not emitted (callers left-join and coalesce(component_id, id)
-    if they want total coverage — see image_dup_components).
+    if they want total coverage — see dedup.phash_clusters).
 
-    strategy: 'auto' counts the deduplicated edge list (observed
-    while the checkpoint materializes — no extra job) and
-    dispatches: <= local_threshold edges (~16 B/edge, so
-    ~32 MB at the default — one comfortable task) runs the exact
-    single-job numpy closure; larger graphs run the distributed
-    star alternation.  'star' / 'local' force a path (tests and
-    known-shape callers).
-
-    max_iter bounds the alternation; large/small-star converges in
-    O(log^2 n) rounds so 20 covers any physically storable graph.  A
-    graph that somehow fails to converge raises rather than returning
-    a partial labeling.  with_stats returns (df, rounds); the local
-    path reports rounds=0.
+    The deduplicated edge list is counted while the checkpoint
+    materializes (no extra job): <= LOCAL_MAX_EDGES edges runs the
+    exact single-job numpy closure, larger graphs the distributed
+    star alternation.  A graph that fails to converge in MAX_ROUNDS
+    alternations raises rather than returning a partial labeling.
+    with_stats returns (df, rounds); the local path reports rounds=0.
     """
-    if strategy not in ("auto", "star", "local"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     n_edges = Observation()
     edges = (pairs.select(F.col(id_a).cast("long").alias("id_a"),
                           F.col(id_b).cast("long").alias("id_b"))
@@ -191,15 +182,12 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
              .distinct()
              .observe(n_edges, F.count(F.lit(1)).alias("n"))
              .localCheckpoint(eager=True))
-    if strategy == "auto":
-        strategy = ("local" if n_edges.get["n"] <= local_threshold
-                    else "star")
-    if strategy == "local":
+    if n_edges.get["n"] <= LOCAL_MAX_EDGES:
         out = edges.coalesce(1).mapInPandas(
             _local_closure, schema="id long, component_id long")
         return (out, 0) if with_stats else out
     rounds = 0
-    for rounds in range(1, max_iter + 1):
+    for rounds in range(1, MAX_ROUNDS + 1):
         stepped = _small_star(_large_star(_symmetrize(edges)))
         # truncate lineage every round: without this the logical plan
         # doubles per iteration and Catalyst analysis time explodes
@@ -211,7 +199,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             break
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
+            f"connected_components did not converge in {MAX_ROUNDS} "
             "large/small-star rounds")
     # fixed point = star forest: every non-root points at its
     # component minimum; roots label themselves

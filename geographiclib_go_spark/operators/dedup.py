@@ -1,20 +1,25 @@
 """Deduplication operators for training-data pipelines (engine-added).
 
-Five dedup families, each scale-minded:
+Six dedup families, each scale-minded and each written once:
 
 - exact_dedup: hash-groupBy on md5(text) — one shuffle, map-side
   partial agg; the survivor choice (min doc_id) is deterministic.
 - minhash LSH: shingle -> k minhashes -> b bands -> band-bucket join.
   Signatures come from the batch-vectorized polynomial-hash kernels
   in operators/sketch_hash.py (one code-point stream per Arrow batch,
-  no per-document Python); candidate generation is a self-join on
-  exact (band, band-values) buckets — the classic shuffle-friendly
-  LSH plan where only colliding buckets pair up.  The band key is the
+  no per-document Python); candidates come from the band table's
+  self-join (minhash_candidates) or a batch x corpus probe
+  (minhash_probe_pairs) on exact (band, band-values) buckets — the
+  classic shuffle-friendly LSH plan where only colliding buckets pair
+  up — and go through one exact-Jaccard verify.  The band key is the
   exact value tuple (not a rehash), so the DuckDB oracle reproduces
   the candidate set bit for bit (sketch_hash.minhash_pairs_oracle_sql).
 - simhash: 64-bit sign-sketch of token hashes; near-dups = Hamming
   distance <= h via chunk-band join (pigeonhole: any pair with <= h
   differing bits shares at least one of h+1 chunks).
+- image near-dup clusters (phash_clusters): the same Hamming band join
+  over perceptual hashes -> connected components; corpus_split adds
+  exact dedup, one survivor per cluster and the split.
 - ngram_jaccard: exact verification kernel used to confirm LSH
   candidates (and usable standalone at small scale).
 - embedding near-dup: cosine >= tau pairs; see similarity.py.
@@ -29,7 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from geographiclib_go_spark.operators import components as cc
+from geographiclib_go_spark.operators import sampling as smp
 from geographiclib_go_spark.operators import sketch_hash as sk
+
+PHASH_MAX_HAMMING = 4  # image near-dup radius in phash bits
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -39,15 +48,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     w = Window.partitionBy(h).orderBy(F.col(id_col).asc())
     return (df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
-
-
-def duplicate_groups(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """(text_hash, n_dups, keeper_id) for groups with >1 member."""
-    return (df.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
-            .agg(F.count("*").alias("n_dups"),
-                 F.min(id_col).alias("keeper_id"))
-            .filter(F.col("n_dups") > 1))
 
 
 def minhash_signature_udf(num_hashes: int = 64, shingle: int = 5):
@@ -72,29 +72,13 @@ def minhash_candidates(df: DataFrame, text_col: str = "text",
     (1/bands)^(1/rows_per_band).  Output: (id_a, id_b) with id_a <
     id_b, deduped across bands.
     """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signature_udf(num_hashes, shingle)
-    s = df.select(F.col(id_col).alias("doc_id"),
-                  sig(F.col(text_col)).alias("_sig"))
-    # band key = the exact value tuple of the band's slice (a struct
-    # equi-join key): no rehash, so the candidate set is reproducible
-    # in the SQL oracle and hash collisions cannot inject pairs
-    bands_df = s.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.struct(*[F.col("_sig")[b * rows_per_band + r]
-                                .alias(f"v{r}")
-                                for r in range(rows_per_band)])
-                     .alias("band_key"))
-            for b in range(bands)])).alias("bb"))
-    bands_df = bands_df.select("doc_id", "bb.band", "bb.band_key")
     # persist the (tiny) band table before the self-join: Spark does
     # not reuse subplans across self-join sides, so without this the
     # signature UDF and the document scan run TWICE (r2 plan audit).
     # At cluster scale the signature table is written once and the
     # join reads it; cache() is the sandbox analog.
-    bands_df = bands_df.cache()
+    bands_df = minhash_band_table(df, text_col, id_col, num_hashes,
+                                  bands, shingle).cache()
     a = bands_df.alias("a")
     b = bands_df.alias("b")
     pairs = (a.join(b, ["band", "band_key"])
@@ -126,13 +110,21 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8,
     (id_a, id_b, jaccard) pairs above threshold."""
     cand = minhash_candidates(docs, text_col, id_col, num_hashes, bands,
                               shingle)
-    texts = docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(text_col).alias("_t"))
-    cand = (cand
-            .join(texts.withColumnRenamed("doc_id", "id_a")
-                  .withColumnRenamed("_t", "_ta"), "id_a")
-            .join(texts.withColumnRenamed("doc_id", "id_b")
-                  .withColumnRenamed("_t", "_tb"), "id_b"))
+    return _jaccard_verify(cand, docs, docs, threshold, text_col, id_col,
+                           shingle)
+
+
+def _jaccard_verify(cand: DataFrame, docs_a: DataFrame,
+                    docs_b: DataFrame, threshold: float, text_col: str,
+                    id_col: str, shingle: int) -> DataFrame:
+    """Exact-Jaccard refine of (id_a, id_b) candidates: id_a's text
+    comes from docs_a, id_b's from docs_b.  Output: (id_a, id_b,
+    jaccard) with jaccard >= threshold."""
+    ta = docs_a.select(F.col(id_col).alias("id_a"),
+                       F.col(text_col).alias("_ta"))
+    tb = docs_b.select(F.col(id_col).alias("id_b"),
+                       F.col(text_col).alias("_tb"))
+    cand = cand.join(ta, "id_a").join(tb, "id_b")
     # asNondeterministic stops Catalyst from inlining the UDF into
     # both the filter AND the projection (the extracted-python-UDF
     # rule otherwise evaluates jaccard twice per candidate — seen in
@@ -231,14 +223,43 @@ def hamming_band_pairs(sigs: DataFrame, sig_col: str, id_col: str,
             .select("id_a", "id_b", "hamming"))
 
 
+def phash_clusters(nodes: DataFrame) -> DataFrame:
+    """`nodes` (one row per distinct `phash`, any other columns kept)
+    with `cid` appended: the minimum phash of its near-dup cluster —
+    Hamming band pairs within PHASH_MAX_HAMMING -> connected
+    components; a phash with no pair labels itself."""
+    pairs = hamming_band_pairs(nodes.select("phash"), sig_col="phash",
+                               id_col="phash",
+                               max_hamming=PHASH_MAX_HAMMING)
+    comp = cc.connected_components(pairs)
+    return (nodes.join(comp, nodes.phash == comp.id, "left")
+            .select(*[nodes[c] for c in nodes.columns],
+                    F.coalesce("component_id", "phash").alias("cid")))
+
+
+def corpus_split(images: DataFrame, weights: dict = None) -> DataFrame:
+    """Image-corpus prep: exact dedup (min image_id per phash) ->
+    near-dup clusters (phash_clusters) -> the min-id survivor per
+    cluster -> deterministic split (sampling.assign_split).  Output:
+    (image_id, phash, cid, split), one row per surviving image."""
+    keep = images.groupBy("phash").agg(F.min("image_id").alias("image_id"))
+    w = Window.partitionBy("cid").orderBy("image_id")
+    surv = (phash_clusters(keep).select("image_id", "phash", "cid")
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
+    return smp.assign_split(surv, "image_id", weights)
+
+
 def minhash_band_table(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 64,
                        bands: int = 16, shingle: int = 5) -> DataFrame:
     """(doc_id, band, band_key) — the persistable LSH index artifact.
 
     One row per (document, band); band_key is the exact signature
-    value tuple (a struct of longs), so the table is plain parquet and
-    a probe is an equi-join on (band, band_key).  At ingest scale this
+    value tuple (a struct of longs, no rehash: the SQL oracle
+    reproduces the buckets and hash collisions cannot inject pairs),
+    so the table is plain parquet and a probe is an equi-join on
+    (band, band_key).  At ingest scale this
     is written ONCE per corpus snapshot (plans/lineage.run_stage) and
     every arriving batch probes it without re-reading corpus text."""
     rows_per_band = num_hashes // bands
@@ -274,48 +295,8 @@ def minhash_probe_pairs(batch_bands: DataFrame, corpus_bands: DataFrame,
             .select(F.col("a.doc_id").alias("id_a"),
                     F.col("b.doc_id").alias("id_b"))
             .distinct())
-    ta = batch_docs.select(F.col(id_col).alias("id_a"),
-                           F.col(text_col).alias("_ta"))
-    tb = corpus_docs.select(F.col(id_col).alias("id_b"),
-                            F.col(text_col).alias("_tb"))
-    cand = cand.join(ta, "id_a").join(tb, "id_b")
-    jac = ngram_jaccard_udf(shingle).asNondeterministic()
-    return (cand.withColumn("jaccard", jac(F.col("_ta"), F.col("_tb")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
-
-
-def minhash_cross_pairs(docs: DataFrame, side_col: str,
-                        left_val: str, right_val: str,
-                        threshold: float = 0.8,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        num_hashes: int = 64, bands: int = 16,
-                        shingle: int = 5) -> DataFrame:
-    """Asymmetric (ingest-time) LSH near-dup join: candidate pairs
-    only BETWEEN the two sides of `side_col` — the incremental-dedup
-    shape where a new batch probes an existing corpus.  This is the
-    single-call convenience form: both band tables are computed here
-    (the shared cache() avoids running the signature UDF once per
-    join side).  For the real ingest contract — corpus signatures
-    persisted once, probed by every batch — build the corpus side
-    with minhash_band_table + plans/lineage.run_stage and call
-    minhash_probe_pairs directly (see queries.docs_incremental_dedup).
-    Output: (id_a = left side, id_b = right side, jaccard)."""
-    sides = docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(side_col).alias("_side"),
-                        F.col(text_col).alias(text_col))
-    bands_df = minhash_band_table(
-        sides, text_col, "doc_id", num_hashes, bands, shingle) \
-        .join(sides.select("doc_id", "_side"), "doc_id").cache()
-    left_docs = sides.filter(F.col("_side") == left_val)
-    right_docs = sides.filter(F.col("_side") == right_val)
-    return minhash_probe_pairs(
-        bands_df.filter(F.col("_side") == left_val)
-        .select("doc_id", "band", "band_key"),
-        bands_df.filter(F.col("_side") == right_val)
-        .select("doc_id", "band", "band_key"),
-        left_docs, right_docs, threshold=threshold,
-        text_col=text_col, id_col="doc_id", shingle=shingle)
+    return _jaccard_verify(cand, batch_docs, corpus_docs, threshold,
+                           text_col, id_col, shingle)
 
 
 def shingle_set_arrays(df: DataFrame, text_col: str = "text",

@@ -418,6 +418,19 @@ def rollback_stage(root: str, stage: str, version: int) -> dict:
     return meta
 
 
+def _tree_mtime(path: str) -> float:
+    """Newest mtime of `path` and everything under it."""
+    newest = os.path.getmtime(path)
+    for dirpath, dirnames, filenames in os.walk(path):
+        for name in dirnames + filenames:
+            try:
+                newest = max(newest, os.path.getmtime(
+                    os.path.join(dirpath, name)))
+            except OSError:  # moved or removed by its live writer
+                continue
+    return newest
+
+
 def expire_snapshots(root: str, stage: str, keep: int = 2,
                      staging_ttl_s: float = 86400.0) -> list:
     """Delete all but the newest `keep` COMMITTED snapshots — never
@@ -425,7 +438,9 @@ def expire_snapshots(root: str, stage: str, keep: int = 2,
     commit.json: pre-staging-protocol leftovers) older than the
     oldest retained committed version, plus STAGING scratch older
     than `staging_ttl_s` (a crashed writer's half-assembled snapshot;
-    the TTL keeps a live concurrent writer's staging dir safe).
+    the TTL keeps a live concurrent writer's staging dir safe).  A
+    staging dir's age is that of the NEWEST entry in its tree: a long
+    parquet write under data/ never touches the top dir's mtime.
     Orphans and dead staging are never readable, so without this they
     would leak disk forever (ADVICE r2).  Returns the expired version
     numbers.
@@ -439,7 +454,7 @@ def expire_snapshots(root: str, stage: str, keep: int = 2,
         for name in os.listdir(staging_parent):
             p = os.path.join(staging_parent, name)
             try:
-                if now - os.path.getmtime(p) > staging_ttl_s:
+                if now - _tree_mtime(p) > staging_ttl_s:
                     shutil.rmtree(p, ignore_errors=True)
             except OSError:
                 continue

@@ -21,11 +21,10 @@ stage.
 
 from __future__ import annotations
 
-import numpy as np
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geographiclib_go_spark.operators import dedup as ded
 from geographiclib_go_spark.operators import nearest
 from geographiclib_go_spark.operators import spatial_join as sj
 from geographiclib_go_spark.operators import tiling
@@ -70,7 +69,9 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
     # 3. hot-tile detection + salting (explicit skew handling)
     hot = tiling.detect_hot_keys(tiles, "tile_id", threshold_ratio=0.01,
                                  min_rows=1000)
-    salted = tiling.salt_hot_keys(tiles, "tile_id", hot)
+    # the salt is a function of phash, so each phash lands in ONE salt
+    # bucket and the per-bucket approx distinct counts add up
+    salted = tiling.salt_hot_keys(tiles, "tile_id", hot, row_cols=["phash"])
 
     # 4. nearest landmark per image: the dim side is tiny, so the
     # scale-correct plan is the map-only broadcast-argmin join
@@ -100,29 +101,11 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
     # 5c. corpus prep: exact dedup (min-id survivor per phash) ->
     # near-dup cluster resolution (Hamming band pairs -> connected
     # components) -> deterministic train/val/test split of the
-    # survivors.  Snapshotted, so a resume skips the whole iterative
-    # components computation.
-    def _prep():
-        from geographiclib_go_spark.operators import components as cc
-        from geographiclib_go_spark.operators import dedup as ded
-        from geographiclib_go_spark.operators import sampling as smp
-        # tiles holds the same (image_id, phash) rows as images; staged,
-        # it is a snapshot read, not another image-generation pass
-        keep = (tiles.select("image_id", "phash").groupBy("phash")
-                .agg(F.min("image_id").alias("image_id")))
-        pairs = ded.hamming_band_pairs(keep.select("phash"),
-                                       sig_col="phash", id_col="phash",
-                                       max_hamming=4)
-        comp = cc.connected_components(pairs)
-        lab = (keep.join(comp, keep.phash == comp.id, "left")
-               .select(keep.image_id, keep.phash,
-                       F.coalesce("component_id", "phash").alias("cid")))
-        from pyspark.sql import Window
-        w = Window.partitionBy("cid").orderBy("image_id")
-        surv = (lab.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
-        return smp.assign_split(surv, "image_id")
-    dedup_split = _stage("dedup_split", _prep)
+    # survivors (dedup.corpus_split).  Snapshotted, so a resume skips
+    # the whole iterative components computation.  tiles holds the
+    # same (image_id, phash) rows as images; staged, it is a snapshot
+    # read, not another image-generation pass.
+    dedup_split = _stage("dedup_split", lambda: ded.corpus_split(tiles))
 
     # 6. per-tile aggregates through the salted key (two-phase:
     # partial on salted key, final on true tile)

@@ -1595,8 +1595,8 @@ def image_phash_near_dup(spark, sf_dir):
     from geographiclib_go_spark.sources import images as im
     imgs = im.generate_image_index(spark, _IMG_QUERY_N)
     sigs = imgs.select("phash").distinct()
-    pairs = ded.hamming_band_pairs(sigs, sig_col="phash",
-                                   id_col="phash", max_hamming=4)
+    pairs = ded.hamming_band_pairs(sigs, sig_col="phash", id_col="phash",
+                                   max_hamming=ded.PHASH_MAX_HAMMING)
     return pairs.select("id_a", "id_b", "hamming").orderBy(
         "id_a", "id_b")
 
@@ -2043,14 +2043,8 @@ def image_dup_components(spark, sf_dir):
     every cluster id, member count, and survivor."""
     from geographiclib_go_spark.sources import images as im
     imgs = im.generate_image_index(spark, _IMG_QUERY_N)
-    sigs = imgs.select("phash").distinct()
-    pairs = ded.hamming_band_pairs(sigs, sig_col="phash",
-                                   id_col="phash", max_hamming=4)
-    comp = cc.connected_components(pairs)
-    lab = (sigs.join(comp, sigs.phash == comp.id, "left")
-           .select(sigs.phash,
-                   F.coalesce("component_id", "phash")
-                   .alias("component_id")))
+    lab = (ded.phash_clusters(imgs.select("phash").distinct())
+           .withColumnRenamed("cid", "component_id"))
     return (imgs.join(lab, "phash")
             .groupBy("component_id")
             .agg(F.countDistinct("phash").alias("n_phashes"),
@@ -2064,25 +2058,19 @@ def image_near_dup_keep_best(spark, sf_dir):
     multimodal pipeline actually ships: within each Hamming cluster
     keep the HIGHEST-RESOLUTION image (max decoded pixel count,
     ties to the lowest id), not just any survivor.  Cluster labels
-    come from the same banded-pairs -> connected-components chain as
-    image_dup_components; the argmax is ONE aggregate via
-    min(struct(-npx, image_id)) — no per-cluster window sort, so a
-    hot cluster never serializes into a single task.  The index path
-    carries npx (3*w*h) from the shared size chain, so no bytes are
-    read.  Oracle: recursive-CTE min-label closure over the pinned
-    phash fixture joined to the invariants fixture's n_px, ROW_NUMBER
-    keep-best — two unrelated CC algorithms AND two unrelated argmax
-    strategies agreeing on every survivor."""
+    come from dedup.phash_clusters, as in image_dup_components; the
+    argmax is ONE aggregate via min(struct(-npx, image_id)) — no
+    per-cluster window sort, so a hot cluster never serializes into
+    a single task.  The index path carries npx (3*w*h) from the
+    shared size chain, so no bytes are read.  Oracle: recursive-CTE
+    min-label closure over the pinned phash fixture joined to the
+    invariants fixture's n_px, ROW_NUMBER keep-best — two unrelated
+    CC algorithms AND two unrelated argmax strategies agreeing on
+    every survivor."""
     from geographiclib_go_spark.sources import images as im
     imgs = im.generate_image_index(spark, _IMG_QUERY_N, with_size=True)
-    sigs = imgs.select("phash").distinct()
-    pairs = ded.hamming_band_pairs(sigs, sig_col="phash",
-                                   id_col="phash", max_hamming=4)
-    comp = cc.connected_components(pairs)
-    lab = (sigs.join(comp, sigs.phash == comp.id, "left")
-           .select(sigs.phash,
-                   F.coalesce("component_id", "phash")
-                   .alias("component_id")))
+    lab = (ded.phash_clusters(imgs.select("phash").distinct())
+           .withColumnRenamed("cid", "component_id"))
     best = F.min(F.struct((-F.col("npx")).alias("_n"),
                           F.col("image_id").alias("_id")))
     return (imgs.join(lab, "phash")
@@ -2107,23 +2095,13 @@ def images_clean_pipeline(spark, sf_dir):
     power-sum split hash) certifies the whole pipeline's row-level
     decisions, not just totals.  This is the query a user runs to
     turn a raw 10^12-image crawl into training shards; every stage
-    is a shuffle-bounded plan already proven individually."""
+    is a shuffle-bounded plan already proven individually.  The chain
+    is dedup.corpus_split, the same function as the pipeline's
+    dedup_split stage."""
     from geographiclib_go_spark.sources import images as im
     imgs = im.generate_image_index(spark, _IMG_QUERY_N)
-    keep = imgs.groupBy("phash").agg(F.min("image_id").alias("image_id"))
-    pairs = ded.hamming_band_pairs(keep.select("phash"),
-                                   sig_col="phash", id_col="phash",
-                                   max_hamming=4)
-    comp = cc.connected_components(pairs)
-    lab = (keep.join(comp, keep.phash == comp.id, "left")
-           .select(keep.image_id, keep.phash,
-                   F.coalesce("component_id", "phash").alias("cid")))
-    w = Window.partitionBy("cid").orderBy("image_id")
-    surv = (lab.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1))
-    out = smp.assign_split(surv, "image_id",
-                           weights={"train": 0.9, "val": 0.05,
-                                    "test": 0.05})
+    out = ded.corpus_split(imgs, weights={"train": 0.9, "val": 0.05,
+                                          "test": 0.05})
     return (out.groupBy("split")
             .agg(F.count("*").alias("n_images"),
                  F.min("image_id").alias("min_id"),

@@ -35,15 +35,17 @@ def _labels(df):
     return {int(r["id"]): int(r["component_id"]) for r in df.collect()}
 
 
-def _check(spark, edges, max_iter=30):
-    """Both strategies must equal the union-find reference (so the
+def _check(spark, edges):
+    """Both paths must equal the union-find reference (so the
     single-task numpy closure and the distributed star alternation
     are parity-tested against each other on every graph here)."""
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = _labels(cc.connected_components(df, max_iter=max_iter,
-                                          strategy="local"))
-    got_star = _labels(cc.connected_components(df, max_iter=max_iter,
-                                               strategy="star"))
+    out, rounds = cc.connected_components(df, with_stats=True)
+    assert rounds == 0  # local closure
+    got = _labels(out)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cc, "LOCAL_MAX_EDGES", 0)  # star alternation
+        got_star = _labels(cc.connected_components(df))
     want = _union_find(None, edges)
     # canonicalize union-find roots to the component minimum
     comp_min = {}
@@ -66,14 +68,14 @@ def test_duplicate_and_reversed_pairs(spark):
     assert set(got.values()) == {1}
 
 
-def test_long_path_converges_in_log_rounds(spark):
+def test_long_path_converges_in_log_rounds(spark, monkeypatch):
     # worst-case diameter: a 400-node path; large/small-star must
     # land the single min label in O(log n) alternations, not O(n)
     edges = [(i, i + 1) for i in range(400)]
     random.Random(7).shuffle(edges)
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    out, rounds = cc.connected_components(df, with_stats=True,
-                                          strategy="star")
+    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", 0)
+    out, rounds = cc.connected_components(df, with_stats=True)
     got = _labels(out)
     want = _union_find(None, edges)
     assert set(got.values()) == {0}
@@ -99,22 +101,24 @@ def test_singletons_not_emitted_and_empty_input(spark):
     assert out.columns == ["id", "component_id"]
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
     df = spark.createDataFrame([(i, i + 1) for i in range(64)],
                                "id_a long, id_b long")
+    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(cc, "MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        cc.connected_components(df, max_iter=1, strategy="star")
+        cc.connected_components(df)
 
 
-def test_auto_dispatches_by_edge_count(spark):
-    """auto = local below the threshold, star above it; identical
-    labels either way."""
+def test_auto_dispatches_by_edge_count(spark, monkeypatch):
+    """local below LOCAL_MAX_EDGES, star above it; identical labels
+    either way."""
     edges = [(i, i + 1) for i in range(50)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     out, rounds = cc.connected_components(df, with_stats=True)
     assert rounds == 0  # local path
-    out2, rounds2 = cc.connected_components(df, with_stats=True,
-                                            local_threshold=10)
+    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", 10)
+    out2, rounds2 = cc.connected_components(df, with_stats=True)
     assert rounds2 >= 1  # forced onto the star path
     assert _labels(out) == _labels(out2)
 

@@ -14,6 +14,7 @@ import json
 import os
 import tempfile
 import threading
+import time
 
 from pyspark.sql import functions as F
 
@@ -115,6 +116,31 @@ def test_expire_sweeps_dead_staging_but_not_live(spark):
         lineage.expire_snapshots(root, "s", keep=2, staging_ttl_s=0)
         assert not os.path.isdir(dead)
         # the committed snapshot is untouched
+        assert lineage.read_stage(spark, root, "s").count() == 10
+
+
+def test_expire_keeps_staging_with_fresh_data(spark):
+    """A live writer's staging dir whose top-level mtime is old (a
+    long parquet write under data/ never refreshes it) is kept while
+    any file in its tree is fresh, and swept once the whole tree has
+    aged past the TTL."""
+    with tempfile.TemporaryDirectory() as root:
+        lineage.run_stage(spark, root, "s", _mk_build(spark, 10, "x"),
+                          input_fingerprint="fp1")
+        live = os.path.join(root, "s", "_staging", "456-cafef00d")
+        data = os.path.join(live, "data")
+        os.makedirs(data)
+        part = os.path.join(data, "part-00000.parquet")
+        with open(part, "w") as fh:
+            fh.write("still being written")
+        old = time.time() - 7200
+        os.utime(data, (old, old))
+        os.utime(live, (old, old))
+        lineage.expire_snapshots(root, "s", keep=2, staging_ttl_s=3600)
+        assert os.path.isfile(part)
+        os.utime(part, (old, old))
+        lineage.expire_snapshots(root, "s", keep=2, staging_ttl_s=3600)
+        assert not os.path.isdir(live)
         assert lineage.read_stage(spark, root, "s").count() == 10
 
 

@@ -730,3 +730,23 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
     finally:
         for k, v in saved.items():
             conf.set(k, v)
+
+
+def test_tile_stats_exact_on_salted_hot_tile(spark):
+    """A hot tile is salted before the per-tile aggregate; each phash
+    must land in one salt bucket, so n_images is exact and the summed
+    per-bucket approx_count_distinct stays within HLL error of the
+    true distinct count (a row-id salt counted a phash once per
+    bucket it landed in)."""
+    from geographiclib_go_spark.plans import pipeline
+    from geographiclib_go_spark.sources import images as im
+
+    imgs = (im.generate_images(spark, 2000)
+            .withColumn("lat", F.lit(12.5)).withColumn("lon", F.lit(45.5)))
+    out = pipeline.tile_and_join(spark, imgs)
+    assert len(out["hot_tiles"]) == 1
+    rows = out["tile_stats"].collect()
+    want = imgs.agg(F.countDistinct("phash")).collect()[0][0]
+    assert len(rows) == 1 and rows[0]["n_images"] == 2000
+    assert want < 2000  # repeated phashes on the hot tile
+    assert abs(rows[0]["approx_distinct_phash"] - want) <= 0.15 * want

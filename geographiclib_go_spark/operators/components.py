@@ -39,10 +39,14 @@ pass — vectorized numpy min-label propagation with pointer-jumping,
 one Spark job, no iteration-driving driver loop — the same
 measured-size dispatch the spatial joins use (spatial_join.py: the
 query side picks the plan).  Above it is the distributed star
-alternation.  Both paths produce the identical (id, component_id =
-component minimum) labeling and are parity-tested against each other
-and a union-find reference (tests/test_components.py, which forces a
-path by patching the constant).
+alternation.  dedup.phash_clusters decides one step earlier: when a
+zero-job parquet-footer bound shows at most dedup.LOCAL_MAX_NODES
+phashes, it pairs them AND calls _local_closure inside one task, so
+neither the edge list nor this module's checkpoint is materialized.
+Both paths produce the identical (id, component_id = component
+minimum) labeling and are parity-tested against each other and a
+union-find reference (tests/test_components.py, which forces a path
+by patching the constant).
 
 Verification: the DuckDB oracle recomputes components from the SAME
 pair set by recursive-CTE min-label closure (queries.py

@@ -18,8 +18,10 @@ Six dedup families, each scale-minded and each written once:
   distance <= h via chunk-band join (pigeonhole: any pair with <= h
   differing bits shares at least one of h+1 chunks).
 - image near-dup clusters (phash_clusters): the same Hamming band join
-  over perceptual hashes -> connected components; corpus_split adds
-  exact dedup, one survivor per cluster and the split.
+  over perceptual hashes -> connected components, or all of it in one
+  task when a zero-job footer bound shows the input is small;
+  corpus_split adds exact dedup, one survivor per cluster and the
+  split.
 - ngram_jaccard: exact verification kernel used to confirm LSH
   candidates (and usable standalone at small scale).
 - embedding near-dup: cosine >= tau pairs; see similarity.py.
@@ -27,6 +29,7 @@ Six dedup families, each scale-minded and each written once:
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -37,8 +40,15 @@ from pyspark.sql.functions import pandas_udf
 from geographiclib_go_spark.operators import components as cc
 from geographiclib_go_spark.operators import sampling as smp
 from geographiclib_go_spark.operators import sketch_hash as sk
+from geographiclib_go_spark.plans import stats as plan_stats
 
 PHASH_MAX_HAMMING = 4  # image near-dup radius in phash bits
+# phash_clusters' single-task bound, the largest node count timed
+# against the distributed band join (end to end, parquet input, 4
+# cores): 10k / 20k / 50k random phashes 0.5 / 0.5 / 0.7 s vs 2.1 /
+# 1.5 / 2.1 s; all in ONE 12-bit chunk bucket 1.8 / 4.0 / 17.8 s vs
+# 2.4 / 4.9 / 23.6 s (the band join's hot key runs in one task too)
+LOCAL_MAX_NODES = 50_000
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -223,11 +233,108 @@ def hamming_band_pairs(sigs: DataFrame, sig_col: str, id_col: str,
             .select("id_a", "id_b", "hamming"))
 
 
+_M1, _M2, _M4, _H01 = (np.uint64(0x5555555555555555),
+                       np.uint64(0x3333333333333333),
+                       np.uint64(0x0F0F0F0F0F0F0F0F),
+                       np.uint64(0x0101010101010101))
+
+
+def _popcount64(x: np.ndarray) -> np.ndarray:
+    """Set bits per element of a uint64 array (SWAR bit count; numpy
+    1.26 has no bitwise_count)."""
+    x = x - ((x >> np.uint64(1)) & _M1)
+    x = (x & _M2) + ((x >> np.uint64(2)) & _M2)
+    x = (x + (x >> np.uint64(4))) & _M4
+    return (x * _H01) >> np.uint64(56)
+
+
+def _hamming_pairs_local(sigs: np.ndarray, max_hamming: int) -> tuple:
+    """(ia, ib) index pairs into the 64-bit signatures `sigs` that
+    differ in <= max_hamming bits: the numpy form of
+    hamming_band_pairs, with the same max_hamming+1 pigeonhole chunks
+    as hamming_chunk_table and the same exact popcount verify.  A pair
+    that shares several chunks is listed once per chunk.
+
+    Inside each chunk the signatures are sorted by chunk value, and
+    step d pairs sorted position k with k+d while both sit in one
+    bucket: a step holds at most len(sigs) candidates, so a skewed
+    chunk value never materializes all of its pairs at once."""
+    u = np.ascontiguousarray(sigs, dtype=np.int64).view(np.uint64)
+    chunks = max_hamming + 1
+    width = 64 // chunks
+    out_a, out_b = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for c in range(chunks):
+        val = (u >> np.uint64(c * width)) & np.uint64((1 << width) - 1)
+        order = np.argsort(val, kind="stable")
+        sv, su = val[order], u[order]
+        starts = np.flatnonzero(np.r_[True, sv[1:] != sv[:-1]])
+        sizes = np.diff(np.r_[starts, sv.size])
+        room = np.repeat(starts + sizes, sizes) - np.arange(sv.size)
+        d = 1
+        pos = np.flatnonzero(room > d)
+        while pos.size:
+            hit = pos[_popcount64(su[pos] ^ su[pos + d]) <= max_hamming]
+            out_a.append(order[hit])
+            out_b.append(order[hit + d])
+            d += 1
+            pos = pos[room[pos] > d]
+    return np.concatenate(out_a), np.concatenate(out_b)
+
+
+def _local_phash_cids(batches):
+    """phash_clusters in one task (mapInArrow over the coalesced
+    nodes): every batch is buffered, the distinct non-null phashes
+    are paired (_hamming_pairs_local) and closed
+    (components._local_closure), and each batch goes out unchanged
+    with its `cid` column appended.  Arrow batches pass every column
+    through exactly; a null phash gets a null cid."""
+    import pyarrow as pa
+    batches = list(batches)
+    if not batches:
+        return
+    col = pa.chunked_array([b.column("phash") for b in batches],
+                           pa.int64())
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    vals = col.fill_null(0).to_numpy()
+    nodes = np.unique(vals[valid])
+    if nodes.size:
+        ia, ib = _hamming_pairs_local(nodes, PHASH_MAX_HAMMING)
+        label = np.arange(nodes.size)
+        comp = next(cc._local_closure(iter([pd.DataFrame(
+            {"id_a": ia, "id_b": ib})])), None)
+        if comp is not None:
+            # ids index the sorted nodes, so the minimum index of a
+            # component is its minimum phash
+            label[comp["id"].to_numpy()] = comp["component_id"].to_numpy()
+        at = np.searchsorted(nodes, vals).clip(max=nodes.size - 1)
+        cid = pa.array(nodes[label[at]], mask=~valid)
+    else:
+        cid = pa.nulls(vals.size, pa.int64())
+    off = 0
+    for b in batches:
+        yield b.append_column("cid", cid.slice(off, b.num_rows))
+        off += b.num_rows
+
+
 def phash_clusters(nodes: DataFrame) -> DataFrame:
     """`nodes` (one row per distinct `phash`, any other columns kept)
     with `cid` appended: the minimum phash of its near-dup cluster —
     Hamming band pairs within PHASH_MAX_HAMMING -> connected
-    components; a phash with no pair labels itself."""
+    components; a phash with no pair labels itself, a null phash gets
+    a null cid.
+
+    A zero-job bound on the node count picks the plan
+    (plans.stats.row_upper_bound: parquet footer rows under a plan
+    that cannot add rows).  At most LOCAL_MAX_NODES nodes cluster in
+    ONE task (_local_phash_cids; its single partition also serves a
+    downstream window on cid without an exchange).  An unknown or
+    larger bound takes the distributed band join
+    (hamming_band_pairs) + connected_components, the scale path."""
+    bound = plan_stats.row_upper_bound(nodes)
+    if bound is not None and bound <= LOCAL_MAX_NODES:
+        schema = T.StructType(nodes.schema.fields
+                              + [T.StructField("cid", T.LongType())])
+        return nodes.coalesce(1).mapInArrow(_local_phash_cids, schema)
     pairs = hamming_band_pairs(nodes.select("phash"), sig_col="phash",
                                id_col="phash",
                                max_hamming=PHASH_MAX_HAMMING)

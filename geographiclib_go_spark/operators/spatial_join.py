@@ -14,9 +14,10 @@ inverse geodesic kernel (inverse.go:30-355) as the exact predicate:
   lower bound (validated in tests against the kernel).  Spark has no
   native kNN join; the loop is driver-coordinated but every step is a
   declarative DataFrame plan.
-- pip_join: polygon cover cells (driver-planned, auto-res via
-  plan_polygon_res, broadcast) -> equi-join -> exact point-in-polygon
-  refine.
+- pip_join: map-only.  Each polygon's cell cover (driver-planned,
+  auto-res via plan_polygon_res) rides in the UDF closure with its
+  ring; one Arrow pass tests point cells against the covers and runs
+  the exact point-in-polygon refine on the hits.
 
 distance_join and knn_join (and clustering.dbscan) let the query
 side pick the plan: size and ids decide.  A side of at most
@@ -36,7 +37,7 @@ import math
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -48,6 +49,7 @@ from geographiclib_go_spark.functions.geodesic_udfs import make_inverse_s12_udf
 from geographiclib_go_spark.operators import cells as kcells
 from geographiclib_go_spark.operators import nearest as _nn
 from geographiclib_go_spark.operators import pip as kpip
+from geographiclib_go_spark.plans import stats as plan_stats
 
 
 def cell_udf(res: int):
@@ -341,81 +343,50 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     return out
 
 
-_CARDINALITY_NODES = ("Filter", "Join", "Aggregate", "GlobalLimit",
-                      "LocalLimit", "Generate", "Union", "Sample",
-                      "Deduplicate", "Window", "Expand", "Intersect",
-                      "Except")
-
-
 def _estimate_row_count(df: DataFrame, limit_rows: int = 1 << 18):
     """(rows, exact) without ever scanning the fact table.
 
-    For a pure (possibly projected) parquet scan the exact count comes
-    from the file footers, read driver-side — zero Spark jobs, the
+    For a parquet scan under nodes that keep its rows (Project, Sort,
+    Repartition) the exact count comes from the file footers, read
+    driver-side (plans.stats.exact_rows) — zero Spark jobs, the
     metadata-only path table formats are built for.  Otherwise a
     bounded limit-count: every task short-circuits at limit_rows, so
     the result is exact when the side is small and a saturated lower
-    bound (exact=False) when it is not.  Plans containing any
-    cardinality-changing node fall through to the bounded probe."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        files = list(df.inputFiles())
-    except Exception:
-        plan, files = None, []
-    if (files and plan is not None
-            and not any(n in plan for n in _CARDINALITY_NODES)
-            and all(f.endswith(".parquet") for f in files)):
-        try:
-            import urllib.parse
-
-            import pyarrow.parquet as pq
-            total = 0
-            for f in files:
-                p = urllib.parse.urlparse(f)
-                path = p.path if p.scheme in ("file", "") else None
-                if path is None:  # non-local fs: no footer access here
-                    raise OSError(f)
-                total += pq.ParquetFile(path).metadata.num_rows
-            return total, True
-        except OSError:
-            pass
+    bound (exact=False) when it is not."""
+    total = plan_stats.exact_rows(df)
+    if total is not None:
+        return total, True
     n = df.limit(limit_rows).count()
     return n, n < limit_rows
 
 
-def make_pip_udf(polygons: dict):
-    """pip(poly_id, lat, lon) -> bool; `polygons` maps poly_id ->
-    (lats tuple, lons tuple), captured in the closure (broadcast-sized
-    catalogs only — the polygon table is a dim table by design)."""
-    polys = {int(k): (np.asarray(v[0], dtype=np.float64),
-                      np.asarray(v[1], dtype=np.float64))
-             for k, v in polygons.items()}
+def make_pip_udf(polygons: dict, res: int):
+    """pip(lat, lon) -> array<long> of the poly_ids whose ring holds
+    the point.  `polygons` maps poly_id -> (lats tuple, lons tuple);
+    each ring and its driver-planned cell cover (pip.ring_cells at
+    `res`) ride in the closure (dim-table catalogs only — the polygon
+    table is a dim table by design).  Per batch: the point cells, an
+    `np.isin` against each cover, and the exact winding test on the
+    cover hits alone."""
+    polys = [(int(k), np.asarray(v[0], dtype=np.float64),
+              np.asarray(v[1], dtype=np.float64),
+              kpip.ring_cells(v[0], v[1], res))
+             for k, v in polygons.items()]
 
-    @pandas_udf(T.BooleanType())
-    def pip(poly_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-        pid = poly_id.to_numpy(np.int64)
+    @pandas_udf(T.ArrayType(T.LongType()))
+    def pip(lat: pd.Series, lon: pd.Series) -> pd.Series:
         la = lat.to_numpy(np.float64)
         lo = lon.to_numpy(np.float64)
-        out = np.zeros(len(pid), dtype=bool)
-        for p in np.unique(pid):
-            m = pid == p
-            rla, rlo = polys[int(p)]
-            out[m] = kpip.points_in_ring(la[m], lo[m], rla, rlo)
+        cell = kcells.cell_from_latlon(la, lo, res)
+        out = [[] for _ in range(len(la))]
+        for pid, rla, rlo, cover in polys:
+            cand = np.flatnonzero(np.isin(cell, cover))
+            inside = kpip.points_in_ring(la[cand], lo[cand], rla, rlo)
+            for r in cand[inside].tolist():
+                out[r].append(pid)
         return pd.Series(out)
 
     return pip
-
-
-def polygon_cover_df(spark: SparkSession, polygons: dict, res: int,
-                     pad_rings: int = 1) -> DataFrame:
-    """Driver-planned (poly_id, cell) cover table — the engine's
-    cell-cover planner (SURVEY.md 4.2)."""
-    rows = []
-    for pid, (lats, lons) in polygons.items():
-        for c in kpip.ring_cells(lats, lons, res, pad_rings).tolist():
-            rows.append((int(pid), c))
-    from geographiclib_go_spark.functions import localdf as _ldf
-    return _ldf.literal_df(spark, rows, "poly_id long, _cell long")
 
 
 def plan_polygon_res(polygons: dict, target_cells: int = 256,
@@ -424,8 +395,8 @@ def plan_polygon_res(polygons: dict, target_cells: int = 256,
     from polygon bbox stats so the largest polygon's cover is about
     `target_cells` cells.  Resolution is correctness-neutral (the PIP
     refine restores exactness) but performance-critical: too coarse
-    floods the refine with candidates, too fine explodes the
-    broadcast cover."""
+    floods the refine with candidates, too fine explodes the cover
+    the UDF closure carries."""
     import math as _math
     ext_deg = 1e-6
     for _, (lats, lons) in polygons.items():
@@ -447,19 +418,18 @@ def plan_polygon_res(polygons: dict, target_cells: int = 256,
 
 def pip_join(points: DataFrame, polygons: dict, res: int = None,
              point_cols=("lat", "lon")) -> DataFrame:
-    """Points annotated with the polygons containing them.
+    """Points annotated with the polygons containing them: one row
+    per (point, containing polygon), the point columns then poly_id.
 
     polygons: poly_id -> (lats, lons) closed-ring vertex sequences.
-    Plan: broadcast cover equi-join -> exact PIP refine (filter).
+    Plan: map-only — one Arrow pass (make_pip_udf: cell cover prefilter
+    + exact PIP refine, covers and rings in the closure) and an
+    explode of its poly_id array; no join, no broadcast.
     res=None auto-plans via plan_polygon_res (bbox-stat scout).
     """
     if res is None:
         res = plan_polygon_res(polygons)
-    spark = points.sparkSession
-    cover = polygon_cover_df(spark, polygons, res)
-    pts = with_cell(points, res, *point_cols, out="_cell")
-    pip = make_pip_udf(polygons)
-    joined = pts.join(F.broadcast(cover), "_cell", "inner")
-    out = joined.filter(pip(F.col("poly_id"),
-                            F.col(point_cols[0]), F.col(point_cols[1])))
-    return out.drop("_cell")
+    pip = make_pip_udf(polygons, res)
+    return points.select(
+        "*", F.explode(pip(F.col(point_cols[0]), F.col(point_cols[1])))
+        .alias("poly_id"))

@@ -21,7 +21,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -45,15 +45,15 @@ def detect_hot_keys(df: DataFrame, key: str,
                     min_rows: int = 10_000) -> list:
     """Scout pass: keys holding more than threshold_ratio of all rows
     (and at least min_rows).  Returns the hot key values (driver-side
-    list — hot keys are few by definition).  One action: the group
-    counts give the total as well as the candidates (groups of at
-    least min_rows); the ratio threshold is applied on the driver."""
-    counts = df.groupBy(key).count()
-    total, cand = counts.agg(
-        F.sum("count"),
-        F.collect_list(F.when(F.col("count") >= min_rows,
-                              F.struct(key, "count")))).collect()[0]
-    thresh = max(int((total or 0) * threshold_ratio), min_rows)
+    list — hot keys are few by definition).  One action over one
+    exchange: an Observation on the input gives the row total, and
+    only the groups of at least min_rows are collected; the ratio
+    threshold is applied on the driver."""
+    total = Observation()
+    cand = (df.observe(total, F.count(F.lit(1)).alias("n"))
+            .groupBy(key).count()
+            .filter(F.col("count") >= min_rows).collect())
+    thresh = max(int(total.get["n"] * threshold_ratio), min_rows)
     return [k for k, n in cand if n >= thresh]
 
 

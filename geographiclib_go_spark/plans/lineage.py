@@ -23,7 +23,12 @@ commit.json carries, besides the input fingerprint and timings:
   every read applies, so a read infers nothing and runs no job, and
   hive partition columns come back with their written types;
 - ``files``: each data file's path (relative to ``data/``) and byte
-  size, which a resume checks against the filesystem.
+  size, which a resume checks against the filesystem;
+- ``jobs`` (only when the caller set a Spark job group): the jobs of
+  that group that ran during the build and write; concurrent writers
+  that share one group count each other's jobs;
+- any ``extra`` fields the caller asked for (``run_stage``), such as
+  the hot tiles of the pipeline's ``tile_stats`` stage.
 
 This buys, with plain files, the Iceberg guarantees the engine
 depends on:
@@ -58,6 +63,7 @@ import time
 import uuid
 from typing import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -169,11 +175,14 @@ def _intact(root: str, stage: str, meta: dict) -> bool:
     return _file_sizes(data_dir) == meta["files"]
 
 
-def stage_is_complete(root: str, stage: str,
-                      input_fingerprint: str = "") -> bool:
+def stage_is_complete(root: str, stage: str, input_fingerprint: str = "",
+                      required=()) -> bool:
+    """The CURRENT commit has this input fingerprint, carries every
+    field named in `required`, and its data files are intact."""
     cur = current_snapshot(root, stage)
     return (cur is not None
             and cur.get("input_fingerprint", "") == input_fingerprint
+            and all(k in cur for k in required)
             and _intact(root, stage, cur))
 
 
@@ -218,7 +227,8 @@ def _commit_meta(stage: str, input_fingerprint: str, t0: float,
 def run_stage(spark: SparkSession, root: str, stage: str,
               build: Callable[[], DataFrame],
               input_fingerprint: str = "",
-              partition_by: list = None) -> DataFrame:
+              partition_by: list = None,
+              extra: dict = None) -> DataFrame:
     """Execute (or resume) one pipeline stage.
 
     If the CURRENT snapshot committed with the same input fingerprint
@@ -234,11 +244,29 @@ def run_stage(spark: SparkSession, root: str, stage: str,
     in its own staging dir, the version-slot rename makes exactly one
     writer own each version number (losers retry with the next), and
     the pointer swap is last-writer-wins between two complete
-    snapshots."""
-    if stage_is_complete(root, stage, input_fingerprint):
-        return read_stage(spark, root, stage)
+    snapshots.
+
+    `extra` carries commit fields beyond the lineage: build() fills
+    its values before the write and they are committed with the
+    snapshot; a resume fills them from the commit.  A commit that
+    lacks one of its keys counts as incomplete, so the stage rebuilds.
+
+    When the caller set a Spark job group, the commit's ``jobs``
+    counts the jobs of build() and the write: the job ids
+    statusTracker lists for that group (no group of its own, so the
+    caller's accounting is kept) after the write, minus those it
+    listed before the build."""
+    extra = {} if extra is None else extra
+    if stage_is_complete(root, stage, input_fingerprint, extra):
+        cur = current_snapshot(root, stage)
+        extra.update((k, cur[k]) for k in extra)
+        return read_stage(spark, root, stage, version=cur["version"])
 
     staging = _staging_dir(root, stage)
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    if group:
+        jobs_before = set(sc.statusTracker().getJobIdsForGroup(group))
 
     t0 = time.time()
     df = build()
@@ -252,6 +280,17 @@ def run_stage(spark: SparkSession, root: str, stage: str,
     lin = obs.get
     meta = _commit_meta(stage, input_fingerprint, t0, data_dir,
                         lin["rows"], lin["checksum"], df.schema.json())
+    meta.update(extra)
+    if group:
+        # the status store is fed by the listener bus: give it up to
+        # 1 s to list every job of the write (a bus still busy then
+        # leaves the count short; it never fails the commit)
+        try:
+            sc._jsc.sc().listenerBus().waitUntilEmpty(1000)
+        except Py4JError:
+            pass
+        meta["jobs"] = len(set(sc.statusTracker()
+                               .getJobIdsForGroup(group)) - jobs_before)
     version = _publish_snapshot(root, stage, staging, meta)
     return read_stage(spark, root, stage, version=version)
 

@@ -5,12 +5,16 @@ This is the north-rule headline pipeline (BASELINE.json metric:
 
   1. scan images (or generate deterministically)
   2. assign tile_id = cell at tile resolution      (map-only kernel)
-  3. detect hot tiles -> salt                      (scout + map)
-  4. kNN/distance join images x landmarks          (cell equi-join +
-                                                    geodesic refine)
-  5. PIP join images x polygon catalog             (broadcast cover +
+  3. nearest landmark per image                    (map-only chord
+                                                    argmin + geodesic
+                                                    refine)
+  4. PIP join images x polygon catalog             (map-only: covers
+                                                    in the closure +
                                                     winding refine)
-  6. per-tile aggregates                           (salted partial agg)
+  5. decode invariants; corpus dedup + split       (Arrow decode;
+                                                    near-dup clusters)
+  6. hot tiles -> salt -> per-tile aggregates      (scout + salted
+                                                    partial agg)
   7. stage snapshots with lineage + metrics        (resumable)
 
 Every stage is a declarative DataFrame plan; custom physics live only
@@ -52,9 +56,11 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
                   tile_res: int = 6, knn_k: int = 1,
                   stage_root: str = None,
                   fingerprint: str = "") -> dict:
-    """Run the flagship pipeline; returns dict of result DataFrames.
+    """Run the flagship pipeline; returns dict of result DataFrames
+    plus "hot_tiles", the list of salted tiles.
 
-    With stage_root set, stages snapshot + resume via lineage.
+    With stage_root set, stages snapshot + resume via lineage, and a
+    resume of a complete root runs no Spark job.
     """
     def _stage(name, build, **kw):
         if stage_root is None:
@@ -66,14 +72,7 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
     tiles = _stage("tiles", lambda: tiling.assign_tiles(
         images.select("image_id", "phash", "lat", "lon"), tile_res))
 
-    # 3. hot-tile detection + salting (explicit skew handling)
-    hot = tiling.detect_hot_keys(tiles, "tile_id", threshold_ratio=0.01,
-                                 min_rows=1000)
-    # the salt is a function of phash, so each phash lands in ONE salt
-    # bucket and the per-bucket approx distinct counts add up
-    salted = tiling.salt_hot_keys(tiles, "tile_id", hot, row_cols=["phash"])
-
-    # 4. nearest landmark per image: the dim side is tiny, so the
+    # 3. nearest landmark per image: the dim side is tiny, so the
     # scale-correct plan is the map-only broadcast-argmin join
     # (operators/nearest.py) — zero shuffle, one Arrow stage over the
     # images; NOT a shuffle join or a driver-looped kNN.
@@ -85,39 +84,52 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
         return out.select(*(cols + (["rank"] if knn_k > 1 else [])))
     near = _stage("nearest_landmark", _near)
 
-    # 5. PIP join vs polygon catalog (Antarctica fixture)
+    # 4. PIP join vs polygon catalog (Antarctica fixture)
     polys = {1: ANTARCTICA_RING}
     in_poly = _stage("pip", lambda: sj.pip_join(
         tiles.select("image_id", "lat", "lon"), polys, res=5)
         .select("image_id", "poly_id"))
 
-    # 5b. per-row invariant stage: decode every payload and verify
+    # 5. per-row invariant stage: decode every payload and verify
     # pixel closeness vs the pristine regeneration (the north rule's
     # decoded-pixel + caption contract), snapshotted so a resume
     # skips the re-decode
     invariants = _stage("invariants", lambda: im.decode_invariants(
         images).select("image_id", "fmt", "pix_sum", "sse", "psnr_ok"))
 
-    # 5c. corpus prep: exact dedup (min-id survivor per phash) ->
+    # 5b. corpus prep: exact dedup (min-id survivor per phash) ->
     # near-dup cluster resolution (Hamming band pairs -> connected
     # components) -> deterministic train/val/test split of the
-    # survivors (dedup.corpus_split).  Snapshotted, so a resume skips
-    # the whole iterative components computation.  tiles holds the
-    # same (image_id, phash) rows as images; staged, it is a snapshot
-    # read, not another image-generation pass.
+    # survivors (dedup.corpus_split).  tiles holds the same
+    # (image_id, phash) rows as images; staged, it is a snapshot read,
+    # not another image-generation pass, and its footer row count
+    # bounds the phash count, so the clustering runs in one task
+    # (dedup.phash_clusters).  Snapshotted, so a resume skips it.
     dedup_split = _stage("dedup_split", lambda: ded.corpus_split(tiles))
 
-    # 6. per-tile aggregates through the salted key (two-phase:
-    # partial on salted key, final on true tile)
-    partial = (salted.groupBy("salted_key")
-               .agg(F.count("*").alias("_n"),
-                    F.approx_count_distinct("phash").alias("_d"),
-                    F.first("tile_id").alias("tile_id")))
-    tile_stats = _stage("tile_stats", lambda: partial
-                        .groupBy("tile_id")
-                        .agg(F.sum("_n").alias("n_images"),
-                             F.sum("_d").alias("approx_distinct_phash")))
+    # 6. hot-tile detection + salting (explicit skew handling), then
+    # per-tile aggregates through the salted key (two-phase: partial
+    # on salted key, final on true tile).  The hot tiles are found
+    # only when this stage builds and are committed with it, so a
+    # resume reads them from the commit and runs no job.
+    hot = {"hot_tiles": None}
+
+    def _tile_stats():
+        hot["hot_tiles"] = tiling.detect_hot_keys(
+            tiles, "tile_id", threshold_ratio=0.01, min_rows=1000)
+        # the salt is a function of phash, so each phash lands in ONE
+        # salt bucket and the per-bucket approx distinct counts add up
+        salted = tiling.salt_hot_keys(tiles, "tile_id", hot["hot_tiles"],
+                                      row_cols=["phash"])
+        partial = (salted.groupBy("salted_key")
+                   .agg(F.count("*").alias("_n"),
+                        F.approx_count_distinct("phash").alias("_d"),
+                        F.first("tile_id").alias("tile_id")))
+        return (partial.groupBy("tile_id")
+                .agg(F.sum("_n").alias("n_images"),
+                     F.sum("_d").alias("approx_distinct_phash")))
+    tile_stats = _stage("tile_stats", _tile_stats, extra=hot)
 
     return {"tiles": tiles, "nearest": near, "in_polygon": in_poly,
             "invariants": invariants, "dedup_split": dedup_split,
-            "tile_stats": tile_stats, "hot_tiles": hot}
+            "tile_stats": tile_stats, "hot_tiles": hot["hot_tiles"]}

@@ -1649,15 +1649,16 @@ def tile_image_brightness(spark, sf_dir):
 def image_zonal_stats(spark, sf_dir):
     """Zonal statistics — the classic raster<->vector aggregate — over
     the image table: every image's placement is tested against the
-    IMAGE_ZONES analysis polygons (ray-casting PIP behind a broadcast
-    cell-cover equi-join, operators/spatial_join.pip_join), the hits
-    are codec-decoded, and per-zone n_images / exact int64 pixel sum /
-    integer mean brightness x100 come out of ONE hash aggregate.
+    IMAGE_ZONES analysis polygons (ray-casting PIP behind a cell-cover
+    prefilter in one map-only Arrow pass,
+    operators/spatial_join.pip_join), the hits are codec-decoded, and
+    per-zone n_images / exact int64 pixel sum / integer mean
+    brightness x100 come out of ONE hash aggregate.
     Multi-membership (zones 2 and 4 overlap) counts the image in each
-    containing zone.  Plan shape: generate -> cell encode -> broadcast
-    cover join -> PIP refine filter -> decode stats is a single
+    containing zone.  Plan shape: generate -> PIP pass (cover
+    prefilter + refine) -> explode -> decode stats is a single
     map-only chain (the only shuffle is the 4-group aggregate), so at
-    10^12 images the cost is one scan — the cover join prunes decode
+    10^12 images the cost is one scan — the PIP pass prunes decode
     work to in-zone rows BEFORE any byte moves.  Oracle: the
     membership fixture (images_zones.parquet) is gated by TWO
     independent even-odd algorithms (northward- vs southward-ray,
@@ -2097,9 +2098,20 @@ def images_clean_pipeline(spark, sf_dir):
     turn a raw 10^12-image crawl into training shards; every stage
     is a shuffle-bounded plan already proven individually.  The chain
     is dedup.corpus_split, the same function as the pipeline's
-    dedup_split stage."""
+    dedup_split stage.  This query's generated input has no footer
+    row bound, so phash_clusters takes its distributed path; the
+    pipeline's parquet input clusters in one task.  Both paths meet
+    this oracle: tests/test_components.py runs _clean_split_summary
+    over a parquet copy of the same image index."""
     from geographiclib_go_spark.sources import images as im
-    imgs = im.generate_image_index(spark, _IMG_QUERY_N)
+    return _clean_split_summary(im.generate_image_index(spark,
+                                                        _IMG_QUERY_N))
+
+
+def _clean_split_summary(imgs):
+    """images_clean_pipeline's result for an (image_id, phash) frame:
+    dedup.corpus_split at 90/5/5 weights, then per-split counts,
+    min/max id and the modular phash witness."""
     out = ded.corpus_split(imgs, weights={"train": 0.9, "val": 0.05,
                                           "test": 0.05})
     return (out.groupBy("split")

@@ -281,14 +281,16 @@ def main():
 
     sections.append((
         "image_zonal_stats (vector zones x decoded raster)",
-        "Generate -> cell encode -> BroadcastHashJoin against the "
-        "tiny zone cell cover -> ray-cast PIP refine (ArrowEvalPython "
-        "filter) -> decode-only MapInPandas is ONE map-only chain: "
-        "the only Exchange in the whole plan is the final 4-group "
-        "partial+final HashAggregate pair.  The cover join prunes "
-        "decode work to in-zone rows BEFORE any pixel bytes move — "
-        "at 10^12 images the cost is one scan of the placements plus "
-        "decode of only the zone hits.",
+        "Generate -> ONE ArrowEvalPython PIP pass (each zone's cell "
+        "cover rides in the UDF closure: np.isin prefilter, ray-cast "
+        "refine on the hits, array of containing zone ids) -> "
+        "Generate explode -> decode-only MapInPandas is ONE map-only "
+        "chain: no BroadcastExchange, and the only Exchange in the "
+        "whole plan is the final 4-group partial+final HashAggregate "
+        "pair.  The PIP pass prunes decode work to in-zone rows "
+        "BEFORE any pixel bytes move — at 10^12 images the cost is "
+        "one scan of the placements plus decode of only the zone "
+        "hits.",
         formatted(Q.image_zonal_stats(spark, sf))))
 
     sections.append((

@@ -4,6 +4,7 @@ composition the registered queries use."""
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -192,3 +193,126 @@ def test_image_near_dup_keep_best_vs_union_find(spark, sf_dir):
            [int(r["n_images"]), (-int(r["best_npx"]), r["best_id"])]
            for r in Q.image_near_dup_keep_best(spark, sf_dir).collect()}
     assert got == want
+
+
+def _phash_nodes(seed):
+    """Distinct signed 64-bit phashes: random singletons, near-dup
+    chains (1-2 bit flips), and one SKEWED chunk bucket (260 phashes
+    whose low 12-bit chunk is 0).  Partners at Hamming distance
+    exactly 4, one flip in each of the four other 12-bit chunks,
+    share ONE chunk with their base, so only that bucket can pair
+    them: skewed-bucket members (the bucket's largest phash among
+    them, the last position of its sorted run) and random bases.
+    Plus one null phash.  Returns (image_id, phash) rows."""
+    rng = np.random.default_rng(seed)
+
+    def flip(x, bits):
+        for b in bits:
+            x ^= np.int64(1) << np.int64(int(b))
+        return x
+
+    def one_chunk_partner(x, keep):
+        return flip(x, [12 * c + rng.integers(12)
+                        for c in range(5) if c != keep])
+
+    vals = list(rng.integers(-2**63, 2**63 - 1, size=80, dtype=np.int64))
+    skew = sorted(rng.integers(-2**63, 2**63 - 1, size=260,
+                               dtype=np.int64) & np.int64(~0xFFF))
+    for x in vals[:20]:  # chains: x -> x' -> x''
+        for _ in range(2):
+            x = flip(x, rng.choice(64, size=int(rng.integers(1, 3)),
+                                   replace=False))
+            vals.append(x)
+    for i, x in enumerate(vals[20:40]):
+        vals.append(one_chunk_partner(x, keep=1 + i % 4))
+    picks = [skew[-1]] + list(rng.choice(skew[:-1], size=39, replace=False))
+    vals += skew + [one_chunk_partner(x, keep=0) for x in picks]
+    vals = sorted({int(v) for v in vals})
+    rows = [(i, v) for i, v in enumerate(vals)]
+    rows.append((len(rows), None))
+    return rows
+
+
+def _phash_reference(rows):
+    """{image_id: cid}: brute-force Hamming <= PHASH_MAX_HAMMING pairs
+    -> union-find, cid = min phash of the cluster, null stays null."""
+    from geographiclib_go_spark.operators import dedup as ded
+    vals = [v for _, v in rows if v is not None]
+    edges = [(a, b) for i, a in enumerate(vals) for b in vals[i + 1:]
+             if bin((a ^ b) & (2**64 - 1)).count("1")
+             <= ded.PHASH_MAX_HAMMING]
+    root = _union_find(None, edges)
+    comp_min = {}
+    for x, r in root.items():
+        comp_min[r] = min(comp_min.get(r, x), x)
+    return {i: (None if v is None else comp_min.get(root.get(v), v))
+            for i, v in rows}
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_phash_clusters_single_task_matches_distributed(
+        spark, tmp_path, monkeypatch, seed):
+    """The single-task near-dup clustering (parquet input under
+    LOCAL_MAX_NODES) and the distributed band join + components both
+    equal a union-find reference, on phash sets with a skewed chunk
+    bucket and a null phash."""
+    from geographiclib_go_spark.operators import dedup as ded
+    rows = _phash_nodes(seed)
+    path = str(tmp_path / "nodes")
+    spark.createDataFrame(rows, "image_id long, phash long") \
+        .write.parquet(path)
+    nodes = spark.read.parquet(path)
+    want = _phash_reference(rows)
+    assert len(set(want.values())) < len(rows) - 20  # real clusters
+
+    def labels(df):
+        return {r["image_id"]: r["cid"] for r in df.collect()}
+
+    local = ded.phash_clusters(nodes)
+    plan = local._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Join" not in plan, plan
+    assert local.columns == ["image_id", "phash", "cid"]
+    assert labels(local) == want
+    monkeypatch.setattr(ded, "LOCAL_MAX_NODES", len(rows) - 1)
+    dist = ded.phash_clusters(nodes)
+    assert "MapInArrow" not in \
+        dist._jdf.queryExecution().executedPlan().toString()
+    assert labels(dist) == want
+
+
+def test_clean_pipeline_on_parquet_clusters_in_one_task(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """images_clean_pipeline's chain over a parquet copy of its image
+    index: the footer bound sends phash_clusters down the single-task
+    path (as in the pipeline's dedup_split stage), corpus_split gives
+    the same rows on the distributed path, and the per-split summary
+    equals the query's DuckDB oracle."""
+    import __spark_entry__ as ent
+    from scripts.oracle_check import duck_views, mismatch
+    from geographiclib_go_spark import queries as Q
+    from geographiclib_go_spark.operators import dedup as ded
+    from geographiclib_go_spark.sources import images as im
+    path = str(tmp_path / "images")
+    im.generate_image_index(spark, Q._IMG_QUERY_N) \
+        .select("image_id", "phash").write.parquet(path)
+    imgs = spark.read.parquet(path)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    local = ded.corpus_split(imgs)
+    assert "MapInArrow" in plan(local)
+    local_rows = sorted(map(tuple, local.collect()))
+    summary = Q._clean_split_summary(imgs).toPandas()
+    monkeypatch.setattr(ded, "LOCAL_MAX_NODES", 0)
+    dist = ded.corpus_split(imgs)
+    assert "MapInArrow" not in plan(dist)
+    assert sorted(map(tuple, dist.collect())) == local_rows
+
+    con = duck_views(sf_dir)
+    try:
+        want = con.sql(ent.oracle_sql()["images_clean_pipeline"]).df()
+    finally:
+        con.close()
+    problem = mismatch(summary, want)
+    assert problem is None, problem

@@ -115,6 +115,7 @@ def test_stage_commit_is_one_job_resume_is_none(spark):
 
         built = _jobs_in_group(spark, "commit-one-job-build", run)
         assert len(built) == 1, built
+        assert lineage.current_snapshot(root, "s")["jobs"] == 1
         resumed = _jobs_in_group(spark, "commit-one-job-resume", run)
         assert resumed == [], resumed
         assert len(lineage.snapshot_history(root, "s")) == 1
@@ -423,28 +424,46 @@ def test_sessionize_matches_builtin_session_window(spark, sf_dir):
 
 
 def test_lineage_survives_crashed_partial_snapshot(spark):
-    """A crash after writing data but before commit.json/pointer swap
-    leaves an orphan snapshot dir; the stage must still read the last
-    committed version, resume correctly, and allocate a FRESH version
-    number past the orphan on the next write."""
-    import json as _json
-    with tempfile.TemporaryDirectory() as root:
-        lineage.run_stage(spark, root, "s", lambda: spark.range(100),
-                          input_fingerprint="fp1")
-        # simulate a crashed writer: orphan v2 with data, no commit
-        orphan = os.path.join(root, "s", "snapshots", "v00002", "data")
-        spark.range(7).write.parquet(orphan)
-        # reads and resume still follow the committed pointer (v1)
-        assert lineage.read_stage(spark, root, "s").count() == 100
-        assert lineage.stage_is_complete(root, "s", "fp1")
-        assert [m["version"]
-                for m in lineage.snapshot_history(root, "s")] == [1]
-        # next write: must not collide with the orphan dir -> v3+
-        lineage.run_stage(spark, root, "s", lambda: spark.range(200),
-                          input_fingerprint="fp2")
-        cur = lineage.current_snapshot(root, "s")
-        assert cur["version"] >= 3
-        assert lineage.read_stage(spark, root, "s").count() == 200
+    """Two crash points of a writer, each run on a fresh root:
+
+    - after writing data but before commit.json and the rename: an
+      orphan snapshot dir without commit.json;
+    - after the rename but before the pointer swap: a complete vN
+      with its commit.json while _CURRENT still names vN-1.
+
+    Either way the stage must still read the version the pointer
+    names, resume correctly, and allocate a FRESH version number past
+    the leftover dir on the next write."""
+    for crash in ("before_rename", "before_pointer_swap"):
+        with tempfile.TemporaryDirectory() as root:
+            lineage.run_stage(spark, root, "s", lambda: spark.range(100),
+                              input_fingerprint="fp1")
+            if crash == "before_rename":
+                # orphan v2 with data, no commit
+                orphan = os.path.join(root, "s", "snapshots", "v00002",
+                                      "data")
+                spark.range(7).write.parquet(orphan)
+                history = [1]
+            else:
+                # a published v2 whose pointer swap never happened
+                v1 = lineage.current_snapshot(root, "s")
+                lineage.run_stage(spark, root, "s",
+                                  lambda: spark.range(7),
+                                  input_fingerprint="fp_crashed")
+                with open(os.path.join(root, "s", "_CURRENT"), "w") as fh:
+                    json.dump(v1, fh)
+                history = [1, 2]
+            # reads and resume still follow the committed pointer (v1)
+            assert lineage.read_stage(spark, root, "s").count() == 100
+            assert lineage.stage_is_complete(root, "s", "fp1")
+            assert [m["version"] for m in
+                    lineage.snapshot_history(root, "s")] == history
+            # next write: must not collide with the v2 dir -> v3+
+            lineage.run_stage(spark, root, "s", lambda: spark.range(200),
+                              input_fingerprint="fp2")
+            cur = lineage.current_snapshot(root, "s")
+            assert cur["version"] >= 3, crash
+            assert lineage.read_stage(spark, root, "s").count() == 200
 
 
 def test_asof_join_empty_right_side(spark):
@@ -750,3 +769,76 @@ def test_tile_stats_exact_on_salted_hot_tile(spark):
     assert len(rows) == 1 and rows[0]["n_images"] == 2000
     assert want < 2000  # repeated phashes on the hot tile
     assert abs(rows[0]["approx_distinct_phash"] - want) <= 0.15 * want
+
+
+def _hot_tile_images(spark, n=2000):
+    """generate_images with ~60% of its rows (picked by an id hash)
+    moved onto one point, so the pipeline salts exactly one hot
+    tile."""
+    from geographiclib_go_spark.sources import images as im
+    on_hot = F.pmod(F.xxhash64("image_id"), F.lit(5)) < 3
+    return (im.generate_images(spark, n, skew_pct=3)
+            .withColumn("lat", F.when(on_hot, 12.5).otherwise(F.col("lat")))
+            .withColumn("lon", F.when(on_hot, 45.5).otherwise(F.col("lon"))))
+
+
+STAGES = ("tiles", "nearest_landmark", "pip", "invariants", "dedup_split",
+          "tile_stats")
+
+
+def test_staged_build_job_counts_and_resume_runs_none(spark):
+    """A staged tile_and_join build runs at most 11 Spark jobs (pip 1,
+    dedup_split at most 2, every job inside a stage commit), and a
+    resume of the complete root runs none: the hot tiles come back
+    from the tile_stats commit."""
+    from geographiclib_go_spark.plans import pipeline
+    imgs = _hot_tile_images(spark)
+    with tempfile.TemporaryDirectory() as root:
+        out = {}
+
+        def run(key):
+            out[key] = pipeline.tile_and_join(spark, imgs, stage_root=root,
+                                              fingerprint="fp")
+        built = _jobs_in_group(spark, "staged-build", lambda: run("build"))
+        commits = {s: lineage.current_snapshot(root, s) for s in STAGES}
+        per_stage = {s: c["jobs"] for s, c in commits.items()}
+        assert len(built) <= 11, per_stage
+        assert sum(per_stage.values()) == len(built), per_stage
+        assert per_stage["pip"] == 1, per_stage
+        assert per_stage["dedup_split"] <= 2, per_stage
+        assert len(out["build"]["hot_tiles"]) == 1
+        assert commits["tile_stats"]["hot_tiles"] == out["build"]["hot_tiles"]
+
+        resumed = _jobs_in_group(spark, "staged-resume",
+                                 lambda: run("resume"))
+        assert resumed == [], resumed
+        assert out["resume"]["hot_tiles"] == out["build"]["hot_tiles"]
+        for s in STAGES:
+            assert lineage.current_snapshot(root, s)["version"] == 1, s
+
+
+def test_tile_stats_commit_without_hot_tiles_rebuilds(spark):
+    """A tile_stats commit written before the hot tiles were committed
+    lacks the field: that stage counts as incomplete and rebuilds
+    (a new version that carries the field); the others resume."""
+    from geographiclib_go_spark.plans import pipeline
+    imgs = _hot_tile_images(spark)
+    with tempfile.TemporaryDirectory() as root:
+        first = pipeline.tile_and_join(spark, imgs, stage_root=root,
+                                       fingerprint="fp")
+        ptr = os.path.join(root, "tile_stats", "_CURRENT")
+        with open(ptr) as fh:
+            old = json.load(fh)
+        del old["hot_tiles"]
+        with open(ptr, "w") as fh:
+            json.dump(old, fh)
+
+        again = pipeline.tile_and_join(spark, imgs, stage_root=root,
+                                       fingerprint="fp")
+        cur = lineage.current_snapshot(root, "tile_stats")
+        assert cur["version"] == 2
+        assert cur["hot_tiles"] == first["hot_tiles"] == again["hot_tiles"]
+        assert len(again["hot_tiles"]) == 1
+        assert (cur["rows"], cur["checksum"]) == (old["rows"], old["checksum"])
+        for s in STAGES[:-1]:
+            assert lineage.current_snapshot(root, s)["version"] == 1, s

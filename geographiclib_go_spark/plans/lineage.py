@@ -24,9 +24,10 @@ commit.json carries, besides the input fingerprint and timings:
   hive partition columns come back with their written types;
 - ``files``: each data file's path (relative to ``data/``) and byte
   size, which a resume checks against the filesystem;
-- ``jobs`` (only when the caller set a Spark job group): the jobs of
-  that group that ran during the build and write; concurrent writers
-  that share one group count each other's jobs;
+- ``jobs`` (only when the caller set a Spark job group): the Spark
+  jobs the build and write ran, counted by a job tag of this call
+  alone, so concurrent writers in one group never count each other's
+  jobs;
 - any ``extra`` fields the caller asked for (``run_stage``), such as
   the hot tiles of the pipeline's ``tile_stats`` stage.
 
@@ -252,10 +253,10 @@ def run_stage(spark: SparkSession, root: str, stage: str,
     lacks one of its keys counts as incomplete, so the stage rebuilds.
 
     When the caller set a Spark job group, the commit's ``jobs``
-    counts the jobs of build() and the write: the job ids
-    statusTracker lists for that group (no group of its own, so the
-    caller's accounting is kept) after the write, minus those it
-    listed before the build."""
+    counts the jobs of build() and the write: they run under a job
+    tag unique to this call (a tag, not a job group, so the caller's
+    group and its accounting are kept), and statusTracker lists the
+    jobs carrying it."""
     extra = {} if extra is None else extra
     if stage_is_complete(root, stage, input_fingerprint, extra):
         cur = current_snapshot(root, stage)
@@ -264,24 +265,26 @@ def run_stage(spark: SparkSession, root: str, stage: str,
 
     staging = _staging_dir(root, stage)
     sc = spark.sparkContext
-    group = sc.getLocalProperty("spark.jobGroup.id")
-    if group:
-        jobs_before = set(sc.statusTracker().getJobIdsForGroup(group))
-
+    tag = "run_stage-" + os.path.basename(staging)
     t0 = time.time()
-    df = build()
-    # unnamed: concurrent writers each get their own observation
-    obs = Observation()
-    writer = df.observe(obs, *_lineage_aggs(df)).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    data_dir = os.path.join(staging, "data")
-    writer.parquet(data_dir)
+    sc.addJobTag(tag)
+    try:
+        df = build()
+        # unnamed: concurrent writers each get their own observation
+        obs = Observation()
+        writer = df.observe(obs, *_lineage_aggs(df)).write \
+            .mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        data_dir = os.path.join(staging, "data")
+        writer.parquet(data_dir)
+    finally:
+        sc.removeJobTag(tag)
     lin = obs.get
     meta = _commit_meta(stage, input_fingerprint, t0, data_dir,
                         lin["rows"], lin["checksum"], df.schema.json())
     meta.update(extra)
-    if group:
+    if sc.getLocalProperty("spark.jobGroup.id"):
         # the status store is fed by the listener bus: give it up to
         # 1 s to list every job of the write (a bus still busy then
         # leaves the count short; it never fails the commit)
@@ -289,8 +292,8 @@ def run_stage(spark: SparkSession, root: str, stage: str,
             sc._jsc.sc().listenerBus().waitUntilEmpty(1000)
         except Py4JError:
             pass
-        meta["jobs"] = len(set(sc.statusTracker()
-                               .getJobIdsForGroup(group)) - jobs_before)
+        meta["jobs"] = len(
+            sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
     version = _publish_snapshot(root, stage, staging, meta)
     return read_stage(spark, root, stage, version=version)
 

@@ -101,10 +101,17 @@ def _pixels_for(ids: np.ndarray, w: int, h: int) -> np.ndarray:
     return out
 
 
+def _header(fmt: str, w: int, h: int) -> bytes:
+    """The fixed bytes before the pixels of a generated `fmt` payload:
+    the P6 header, behind the JSIM tag for jpeg-sim."""
+    return (b"JSIM\n" if fmt == "jpeg-sim" else b"") \
+        + b"P6\n%d %d\n255\n" % (w, h)
+
+
 def ppm_encode(pix: np.ndarray) -> bytes:
     """P6 PPM (uncompressed, lossless)."""
     h, w = pix.shape[:2]
-    return b"P6\n%d %d\n255\n" % (w, h) + pix.tobytes()
+    return _header("ppm", w, h) + pix.tobytes()
 
 
 def ppm_decode(data: bytes) -> np.ndarray:
@@ -158,6 +165,36 @@ def phash64(pix: np.ndarray) -> np.int64:
     return np.int64(phash64_batch(pix[None])[0])
 
 
+def _size_pick(ids: np.ndarray, sizes) -> np.ndarray:
+    """Index into `sizes` of each image's (square) size."""
+    return (splitmix64(ids ^ np.uint64(7))
+            % np.uint64(len(sizes))).astype(np.int64)
+
+
+def _is_lossy(ids: np.ndarray, lossy_pct: int) -> np.ndarray:
+    """True where an image is stored with the lossy jpeg-sim codec."""
+    return (splitmix64(ids ^ np.uint64(13))
+            % np.uint64(100)) < np.uint64(lossy_pct)
+
+
+def _stored_pixels(ids: np.ndarray, sizes, lossy_pct: int):
+    """The generator's pixel chain, one size batch at a time: yields
+    (mask, wh, pristine, stored) for each size some id picked, where
+    pristine is _pixels_for(ids[mask], wh, wh) and stored holds the
+    pixels the codec keeps (quantized to q = 8 steps on lossy rows)."""
+    size_pick = _size_pick(ids, sizes)
+    lossy = _is_lossy(ids, lossy_pct)
+    for si, wh in enumerate(sizes):
+        m = size_pick == si
+        if not m.any():
+            continue
+        pix = _pixels_for(ids[m], wh, wh)
+        q = 8
+        qpix = ((pix.astype(np.int32) // q) * q + q // 2) \
+            .clip(0, 255).astype(np.uint8)
+        yield m, wh, pix, np.where(lossy[m][:, None, None, None], qpix, pix)
+
+
 def phash_for_ids(ids: np.ndarray, sizes=(16, 32),
                   lossy_pct: int = 30) -> np.ndarray:
     """Driver-side replication of the phash each generated image row
@@ -167,19 +204,7 @@ def phash_for_ids(ids: np.ndarray, sizes=(16, 32),
     with the distributed generator is pytest-gated."""
     ids = np.asarray(ids).astype(np.uint64)
     out = np.zeros(ids.size, np.int64)
-    size_pick = (splitmix64(ids ^ np.uint64(7))
-                 % np.uint64(len(sizes))).astype(np.int64)
-    lossy = (splitmix64(ids ^ np.uint64(13))
-             % np.uint64(100)) < np.uint64(lossy_pct)
-    for si, wh in enumerate(sizes):
-        m = size_pick == si
-        if not m.any():
-            continue
-        pix = _pixels_for(ids[m], wh, wh)
-        q = 8
-        qpix = ((pix.astype(np.int32) // q) * q + q // 2) \
-            .clip(0, 255).astype(np.uint8)
-        eff = np.where(lossy[m][:, None, None, None], qpix, pix)
+    for m, _, _, eff in _stored_pixels(ids, sizes, lossy_pct):
         out[m] = phash64_batch(eff)
     return out
 
@@ -245,20 +270,8 @@ def row_invariants_for_ids(ids: np.ndarray, sizes=(16, 32),
         "n_px": np.zeros(n, np.int64),
         "phash": np.zeros(n, np.int64),
     }
-    size_pick = (splitmix64(ids ^ np.uint64(7))
-                 % np.uint64(len(sizes))).astype(np.int64)
-    lossy = (splitmix64(ids ^ np.uint64(13))
-             % np.uint64(100)) < np.uint64(lossy_pct)
-    out["fmt"][:] = np.where(lossy, "jpeg-sim", "ppm")
-    for si, wh in enumerate(sizes):
-        m = size_pick == si
-        if not m.any():
-            continue
-        pix = _pixels_for(ids[m], wh, wh)
-        q = 8
-        qpix = ((pix.astype(np.int32) // q) * q + q // 2) \
-            .clip(0, 255).astype(np.uint8)
-        eff = np.where(lossy[m][:, None, None, None], qpix, pix)
+    out["fmt"][:] = np.where(_is_lossy(ids, lossy_pct), "jpeg-sim", "ppm")
+    for m, wh, pix, eff in _stored_pixels(ids, sizes, lossy_pct):
         out["phash"][m] = phash64_batch(eff)
         out["pix_sum"][m] = eff.astype(np.int64).sum(axis=(1, 2, 3))
         diff = eff.astype(np.int64) - pix.astype(np.int64)
@@ -280,19 +293,7 @@ def resized_pix_sums_for_ids(ids: np.ndarray, out_w: int = 16,
     images_resized.parquet fixture for queries.image_resize_stats."""
     ids = np.asarray(ids).astype(np.uint64)
     out = np.zeros(ids.size, np.int64)
-    size_pick = (splitmix64(ids ^ np.uint64(7))
-                 % np.uint64(len(sizes))).astype(np.int64)
-    lossy = (splitmix64(ids ^ np.uint64(13))
-             % np.uint64(100)) < np.uint64(lossy_pct)
-    for si, wh in enumerate(sizes):
-        m = size_pick == si
-        if not m.any():
-            continue
-        pix = _pixels_for(ids[m], wh, wh)
-        q = 8
-        qpix = ((pix.astype(np.int32) // q) * q + q // 2) \
-            .clip(0, 255).astype(np.uint8)
-        eff = np.where(lossy[m][:, None, None, None], qpix, pix)
+    for m, wh, _, eff in _stored_pixels(ids, sizes, lossy_pct):
         yi = np.arange(out_h) * wh // out_h
         xi = np.arange(out_w) * wh // out_w
         out[m] = eff[:, yi][:, :, xi].astype(np.int64).sum(axis=(1, 2, 3))
@@ -314,19 +315,7 @@ def pixel_embed_for_ids(ids: np.ndarray, sizes=(16, 32),
     images_embed.parquet for queries.image_embed_knn."""
     ids = np.asarray(ids).astype(np.uint64)
     out = np.zeros((ids.size, 64), np.int64)
-    size_pick = (splitmix64(ids ^ np.uint64(7))
-                 % np.uint64(len(sizes))).astype(np.int64)
-    lossy = (splitmix64(ids ^ np.uint64(13))
-             % np.uint64(100)) < np.uint64(lossy_pct)
-    for si, wh in enumerate(sizes):
-        m = size_pick == si
-        if not m.any():
-            continue
-        pix = _pixels_for(ids[m], wh, wh)
-        q = 8
-        qpix = ((pix.astype(np.int32) // q) * q + q // 2) \
-            .clip(0, 255).astype(np.uint8)
-        eff = np.where(lossy[m][:, None, None, None], qpix, pix)
+    for m, wh, _, eff in _stored_pixels(ids, sizes, lossy_pct):
         rgb = eff.astype(np.int64).sum(axis=-1)          # (n, wh, wh)
         b = wh // 8
         cuts = np.arange(0, wh, b)
@@ -347,19 +336,7 @@ def flipped_wsums_for_ids(ids: np.ndarray, sizes=(16, 32),
     queries.image_augment_flip."""
     ids = np.asarray(ids).astype(np.uint64)
     out = np.zeros(ids.size, np.int64)
-    size_pick = (splitmix64(ids ^ np.uint64(7))
-                 % np.uint64(len(sizes))).astype(np.int64)
-    lossy = (splitmix64(ids ^ np.uint64(13))
-             % np.uint64(100)) < np.uint64(lossy_pct)
-    for si, wh in enumerate(sizes):
-        m = size_pick == si
-        if not m.any():
-            continue
-        pix = _pixels_for(ids[m], wh, wh)
-        q = 8
-        qpix = ((pix.astype(np.int32) // q) * q + q // 2) \
-            .clip(0, 255).astype(np.uint8)
-        eff = np.where(lossy[m][:, None, None, None], qpix, pix)
+    for m, wh, _, eff in _stored_pixels(ids, sizes, lossy_pct):
         flipped = eff[:, :, ::-1, :]
         wgt = np.arange(1, wh + 1, dtype=np.int64)[None, None, :, None]
         out[m] = (flipped.astype(np.int64) * wgt).sum(axis=(1, 2, 3))
@@ -432,8 +409,7 @@ def generate_image_index(spark: SparkSession, n: int, skew_pct: int = 3,
             if ids.size == 0:
                 continue
             ph = phash_for_ids(ids, sizes=sizes, lossy_pct=lossy_pct)
-            lossy = (splitmix64(ids ^ np.uint64(13))
-                     % np.uint64(100)) < np.uint64(lossy_pct)
+            lossy = _is_lossy(ids, lossy_pct)
             lat, lon = latlon_for_ids(ids, ph, skew_pct)
             row = {
                 "image_id": [f"img_{int(i):012d}" for i in ids],
@@ -447,9 +423,7 @@ def generate_image_index(spark: SparkSession, n: int, skew_pct: int = 3,
             if with_size:
                 # same size chain as generate_images /
                 # row_invariants_for_ids: splitmix64(id ^ 7) picks wh
-                size_pick = (splitmix64(ids ^ np.uint64(7))
-                             % np.uint64(len(sizes))).astype(np.int64)
-                wh = np.asarray(sizes, np.int64)[size_pick]
+                wh = np.asarray(sizes, np.int64)[_size_pick(ids, sizes)]
                 row["npx"] = 3 * wh * wh
             yield pd.DataFrame(row)
 
@@ -479,57 +453,27 @@ def generate_images(spark: SparkSession, n: int, skew_pct: int = 3,
             n_b = ids.size
             if n_b == 0:
                 continue
-            size_pick = (splitmix64(ids ^ np.uint64(7))
-                         % np.uint64(len(sizes))).astype(np.int64)
-            lossy = (splitmix64(ids ^ np.uint64(13))
-                     % np.uint64(100)) < np.uint64(lossy_pct)
+            lossy = _is_lossy(ids, lossy_pct)
             rows = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt",
                                     "caption", "phash", "lat", "lon")}
+            id_parts = []
             # group by size so pixel generation + phash vectorize per
             # size; only the bytes-object assembly stays per row
-            for si, wh in enumerate(sizes):
-                m = size_pick == si
-                if not m.any():
-                    continue
-                sub = ids[m]
-                pix = _pixels_for(sub, wh, wh)
+            for m, wh, _, eff in _stored_pixels(ids, sizes, lossy_pct):
                 sub_lossy = lossy[m]
-                q = 8
-                qpix = ((pix.astype(np.int32) // q) * q + q // 2) \
-                    .clip(0, 255).astype(np.uint8)
-                eff = np.where(sub_lossy[:, None, None, None], qpix, pix)
                 ph_all = phash64_batch(eff)
-                header = b"P6\n%d %d\n255\n" % (wh, wh)
-                for t, sid in enumerate(sub):
-                    if sub_lossy[t]:
-                        data = b"JSIM\n" + header + qpix[t].tobytes()
-                        fmt = "jpeg-sim"
-                    else:
-                        data = header + pix[t].tobytes()
-                        fmt = "ppm"
+                id_parts.append(ids[m])
+                for t, sid in enumerate(ids[m]):
+                    fmt = "jpeg-sim" if sub_lossy[t] else "ppm"
                     rows["image_id"].append(f"img_{int(sid):012d}")
-                    rows["bytes"].append(data)
+                    rows["bytes"].append(_header(fmt, wh, wh)
+                                         + eff[t].tobytes())
                     rows["w"].append(wh)
                     rows["h"].append(wh)
                     rows["fmt"].append(fmt)
                     rows["phash"].append(int(ph_all[t]))
-            ph_arr = np.array(rows["phash"], dtype=np.int64)
-            id_arr = np.array(
-                [int(s.split("_")[1]) for s in rows["image_id"]],
-                dtype=np.uint64)
-            lat, lon = latlon_from_phash(ph_arr)
-            # skew stratum: force a deterministic slice into hot discs
-            hot = (splitmix64(id_arr ^ np.uint64(99)) % np.uint64(100)
-                   ) < np.uint64(skew_pct)
-            which = (splitmix64(id_arr ^ np.uint64(101))
-                     % np.uint64(len(HOT_CENTERS))).astype(np.int64)
-            du = _unit(splitmix64(id_arr ^ np.uint64(103)))
-            dv = _unit(splitmix64(id_arr ^ np.uint64(107)))
-            hc = np.array(HOT_CENTERS)
-            lat = np.where(hot, hc[which, 0]
-                           + (du - 0.5) * 2 * HOT_RADIUS_DEG, lat)
-            lon = np.where(hot, hc[which, 1]
-                           + (dv - 0.5) * 2 * HOT_RADIUS_DEG, lon)
+            id_arr = np.concatenate(id_parts)
+            lat, lon = latlon_for_ids(id_arr, rows["phash"], skew_pct)
             rows["lat"] = lat.tolist()
             rows["lon"] = lon.tolist()
             rows["caption"] = _caption_for(id_arr, lat, lon)
@@ -538,6 +482,12 @@ def generate_images(spark: SparkSession, n: int, skew_pct: int = 3,
     return (spark.range(0, n, 1, partitions)
             .mapInPandas(gen, IMAGES_SCHEMA))
 
+
+# rows per decode batch: bounds a worker's transient pixel arrays
+# whatever the Arrow batch size (256 32x32 images: 0.8 MB of uint8,
+# 3 MB per int32 and 2 MB per float64 temporary of _pixels_for); as
+# fast as 1024 or 4096 rows, with a lower worker peak RSS
+_DECODE_CHUNK = 256
 
 INVARIANTS_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType()),
@@ -556,9 +506,12 @@ def decode_invariants(images_df: DataFrame) -> DataFrame:
     errors, and emit psnr_ok — the exact integer form of
     PSNR >= 40 dB (sse * 10^4 <= 255^2 * n_px) — plus the caption.
     Used by queries.image_row_invariants (driver hash gate vs the
-    committed fixture) and as a pipeline stage.  The per-row decode
-    loop is inherent to variable-length codec parsing; everything
-    else is numpy."""
+    committed fixture) and as a pipeline stage.
+
+    Every row decodes with decode_image (a malformed payload raises
+    as that parse does); the decoded pixels of one (w, h) size are
+    stacked, up to _DECODE_CHUNK rows at a time, so one _pixels_for
+    call and one sum serve the whole chunk."""
     def inv(batches):
         for pdf in batches:
             nb = len(pdf)
@@ -566,17 +519,20 @@ def decode_invariants(images_df: DataFrame) -> DataFrame:
                 continue
             ids = np.array([int(s.split("_")[1]) for s in pdf.image_id],
                            dtype=np.uint64)
+            data, fmt = pdf.bytes.tolist(), pdf.fmt.tolist()
             pix_sum = np.zeros(nb, np.int64)
             sse = np.zeros(nb, np.int64)
-            for t in range(nb):
-                decoded = decode_image(pdf.bytes.iloc[t],
-                                       pdf.fmt.iloc[t])
-                pristine = _pixels_for(
-                    ids[t:t + 1], int(pdf.w.iloc[t]),
-                    int(pdf.h.iloc[t]))[0]
-                pix_sum[t] = decoded.astype(np.int64).sum()
-                d = decoded.astype(np.int64) - pristine.astype(np.int64)
-                sse[t] = (d * d).sum()
+            sizes = pdf.groupby(["w", "h"], dropna=False).indices
+            for (w, h), rows in sizes.items():
+                for lo in range(0, rows.size, _DECODE_CHUNK):
+                    part = rows[lo:lo + _DECODE_CHUNK]
+                    pristine = _pixels_for(ids[part], int(w), int(h))
+                    decoded = np.stack([decode_image(data[t], fmt[t])
+                                        for t in part])
+                    d = decoded.astype(np.int32) - pristine
+                    pix_sum[part] = decoded.sum(axis=(1, 2, 3),
+                                                dtype=np.int64)
+                    sse[part] = (d * d).sum(axis=(1, 2, 3), dtype=np.int64)
             n_px = 3 * pdf.w.to_numpy(np.int64) * pdf.h.to_numpy(np.int64)
             yield pd.DataFrame({
                 "image_id": pdf.image_id,

@@ -175,3 +175,48 @@ def test_version_slot_collision_retries(spark, monkeypatch):
         cur = lineage.current_snapshot(root, "s")
         assert cur["version"] == 3 and cur["rows"] == 20
         assert lineage.read_stage(spark, root, "s").count() == 20
+
+
+def test_concurrent_writers_in_one_group_count_own_jobs(spark):
+    """Two threads in one job group write two stages at once.  Each
+    commit's ``jobs`` counts its own writer's jobs alone: writer "a"
+    runs one extra job in build() (2 in all), "b" none (1), and both
+    builds start only after both writers are inside run_stage."""
+    sc = spark.sparkContext
+    with tempfile.TemporaryDirectory() as root:
+        barrier = threading.Barrier(2)
+        errors = {}
+
+        def writer(stage):
+            def build():
+                barrier.wait(timeout=60)
+                if stage == "a":
+                    spark.range(10).collect()
+                return _mk_build(spark, 100, stage)()
+
+            sc.setJobGroup("shared-writers", "two concurrent writers")
+            try:
+                lineage.run_stage(spark, root, stage, build,
+                                  input_fingerprint="fp")
+            except Exception as e:  # pragma: no cover - failure path
+                errors[stage] = e
+            finally:
+                sc.setJobGroup(None, None)
+
+        ts = [threading.Thread(target=writer, args=(s,))
+              for s in ("a", "b")]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in ts)
+        assert not errors, f"writer(s) failed: {errors}"
+        # run_stage's bounded bus drain may leave a count short, never
+        # long: neither writer counts the other's jobs
+        jobs = {s: lineage.current_snapshot(root, s)["jobs"]
+                for s in ("a", "b")}
+        assert jobs["a"] <= 2 and jobs["b"] <= 1, jobs
+        # ... though the group holds all three
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)  # raises on timeout
+        in_group = sc.statusTracker().getJobIdsForGroup("shared-writers")
+        assert len(in_group) == 3, list(in_group)

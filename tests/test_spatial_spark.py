@@ -245,6 +245,55 @@ def test_images_source_invariants(spark):
     assert len(hot) >= 10
 
 
+def _per_row_invariants(pdf):
+    """Reference for decode_invariants: one decode_image parse and one
+    pristine regeneration per row."""
+    pix_sum, sse = [], []
+    for r in pdf.itertuples():
+        decoded = im.decode_image(r.bytes, r.fmt).astype(np.int64)
+        pristine = im._pixels_for(
+            np.array([int(r.image_id.split("_")[1])], np.uint64),
+            r.w, r.h)[0].astype(np.int64)
+        pix_sum.append(decoded.sum())
+        sse.append(((decoded - pristine) ** 2).sum())
+    return pix_sum, sse
+
+
+def test_decode_invariants_batches_match_per_row_decode(spark):
+    """The per-size batch sums equal the per-row reference for
+    generated rows of both codecs, a non-square image, a flipped pixel
+    and a header with a double space; a truncated payload still fails
+    the job."""
+    pdf = im.generate_images(spark, 200, skew_pct=5).toPandas()
+
+    def pristine(i, w, h):
+        return im._pixels_for(np.array([i], np.uint64), w, h)[0]
+
+    flipped = pristine(1001, 16, 16).copy()
+    flipped[3, 5, 1] ^= 0x40
+    odd = [(1000, im.ppm_encode(pristine(1000, 24, 16)), 24, 16),
+           (1001, im.ppm_encode(flipped), 16, 16),
+           (1002, b"P6\n16  16\n255\n" + pristine(1002, 16, 16).tobytes(),
+            16, 16)]
+    extra = pd.DataFrame([{**pdf.iloc[0].to_dict(), "bytes": b,
+                           "image_id": f"img_{i:012d}", "w": w, "h": h,
+                           "fmt": "ppm"} for i, b, w, h in odd])
+    pdf = pd.concat([pdf, extra], ignore_index=True)
+    got = (im.decode_invariants(spark.createDataFrame(pdf, im.IMAGES_SCHEMA))
+           .toPandas().set_index("image_id").loc[pdf.image_id])
+    pix_sum, sse = _per_row_invariants(pdf)
+    assert got.pix_sum.tolist() == pix_sum
+    assert got.sse.tolist() == sse
+    assert got.loc["img_000000001001"].sse == 0x40 ** 2
+    assert set(got.fmt) == {"ppm", "jpeg-sim"}
+
+    bad = pdf.iloc[:1].copy()
+    bad["bytes"] = [bad.bytes.iloc[0][:-3]]
+    with pytest.raises(Exception, match="reshape"):
+        im.decode_invariants(
+            spark.createDataFrame(bad, im.IMAGES_SCHEMA)).collect()
+
+
 def test_knn_strategies_agree(spark, points_df, queries_pdf, monkeypatch):
     """scan (single-scan partial top-k) and ring expansion must
     return the same per-query distance sets."""

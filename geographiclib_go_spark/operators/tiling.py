@@ -2,11 +2,12 @@
 
 - tile assignment: tile_id = cell id at tile resolution — one
   vectorized kernel call, no shuffle (map-side only).
-- hot-cell detection + salting (north rule): a count-based scout pass
-  finds cells above threshold; hot keys get a salt suffix so the
-  shuffle spreads them over `salt_factor` reducers.  AQE skew-join
-  splitting stays on as the runtime backstop; this is the explicit,
-  logged decision the north rule asks for.
+- hot cells (north rule's explicit skew handling): no salt on an
+  aggregate, whose partial aggregation already folds a hot key to one
+  row per map task (the pipeline's tile_stats is one groupBy).  A hot
+  key really lands in one task only in a holistic operator: the salted
+  (tile, salt) Window of queries.image_tile_rebalance.  AQE skew-join
+  splitting stays on as the runtime backstop for joins.
 - polygon_area_agg: groupBy(poly_id).applyInPandas running the
   vectorized edge fold (polygon.go:85-168 semantics; exactly-rounded
   accumulation) — one Arrow batch per polygon.
@@ -21,7 +22,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -38,54 +39,6 @@ def assign_tiles(df: DataFrame, tile_res: int, lat_col: str = "lat",
                  lon_col: str = "lon", out: str = "tile_id") -> DataFrame:
     """tile_id = cell at tile resolution (map-side, shuffle-free)."""
     return with_cell(df, tile_res, lat_col, lon_col, out=out)
-
-
-def detect_hot_keys(df: DataFrame, key: str,
-                    threshold_ratio: float = 0.02,
-                    min_rows: int = 10_000) -> list:
-    """Scout pass: keys holding more than threshold_ratio of all rows
-    (and at least min_rows).  Returns the hot key values (driver-side
-    list — hot keys are few by definition).  One action over one
-    exchange: an Observation on the input gives the row total, and
-    only the groups of at least min_rows are collected; the ratio
-    threshold is applied on the driver."""
-    total = Observation()
-    cand = (df.observe(total, F.count(F.lit(1)).alias("n"))
-            .groupBy(key).count()
-            .filter(F.col("count") >= min_rows).collect())
-    thresh = max(int(total.get["n"] * threshold_ratio), min_rows)
-    return [k for k, n in cand if n >= thresh]
-
-
-def salt_hot_keys(df: DataFrame, key: str, hot_keys: list,
-                  salt_factor: int = 16,
-                  out: str = "salted_key",
-                  row_cols: list = None) -> DataFrame:
-    """Append a deterministic salt to hot keys so downstream
-    repartition / aggregation spreads them.  Aggregations must
-    partial-agg on the salted key then final-agg on the true key.
-
-    The salt is never random (F.rand salts are partition-placement-
-    dependent, so retried tasks would emit different rows — poison
-    for resumable lineage): with `row_cols` it is
-    pmod(xxhash64(row_cols), salt_factor) — a pure function of row
-    content, stable under retries AND repartitioning; without it,
-    pmod(xxhash64(monotonically_increasing_id()), salt_factor) —
-    stable under task retry (same partition content -> same ids),
-    which also spreads fully identical rows."""
-    if not hot_keys:
-        return df.withColumn(out, F.col(key).cast("string"))
-    hot = F.col(key).isin(hot_keys)
-    if row_cols:
-        basis = F.xxhash64(*[F.col(c) for c in row_cols])
-    else:
-        basis = F.xxhash64(F.monotonically_increasing_id())
-    salt = F.pmod(basis, F.lit(salt_factor)).cast("int")
-    return df.withColumn(
-        out,
-        F.when(hot, F.concat_ws("#", F.col(key).cast("string"),
-                                salt.cast("string")))
-        .otherwise(F.col(key).cast("string")))
 
 
 POLY_RESULT_SCHEMA = T.StructType([

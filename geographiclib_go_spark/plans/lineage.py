@@ -248,9 +248,12 @@ def run_stage(spark: SparkSession, root: str, stage: str,
     snapshots.
 
     `extra` carries commit fields beyond the lineage: build() fills
-    its values before the write and they are committed with the
-    snapshot; a resume fills them from the commit.  A commit that
-    lacks one of its keys counts as incomplete, so the stage rebuilds.
+    its values, and they are committed with the snapshot; a resume
+    fills them from the commit.  A value may be a zero-argument
+    callable (say, one reading an Observation that build() put on its
+    frame): it is called after the write and its result written back
+    into `extra`.  A commit that lacks one of its keys counts as
+    incomplete, so the stage rebuilds.
 
     When the caller set a Spark job group, the commit's ``jobs``
     counts the jobs of build() and the write: they run under a job
@@ -281,6 +284,7 @@ def run_stage(spark: SparkSession, root: str, stage: str,
     finally:
         sc.removeJobTag(tag)
     lin = obs.get
+    extra.update({k: v() for k, v in extra.items() if callable(v)})
     meta = _commit_meta(stage, input_fingerprint, t0, data_dir,
                         lin["rows"], lin["checksum"], df.schema.json())
     meta.update(extra)

@@ -13,8 +13,9 @@ This is the north-rule headline pipeline (BASELINE.json metric:
                                                     winding refine)
   5. decode invariants; corpus dedup + split       (Arrow decode;
                                                     near-dup clusters)
-  6. hot tiles -> salt -> per-tile aggregates      (scout + salted
-                                                    partial agg)
+  6. per-tile aggregates                           (one groupBy;
+                                                    hot tiles observed
+                                                    during the write)
   7. stage snapshots with lineage + metrics        (resumable)
 
 Every stage is a declarative DataFrame plan; custom physics live only
@@ -25,7 +26,7 @@ stage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from geographiclib_go_spark.operators import dedup as ded
@@ -44,6 +45,10 @@ DEFAULT_LANDMARKS = [
     (9, -1.2921, 36.8219), (10, 64.1466, -21.9426), (11, -77.8463, 166.6683),
 ]
 
+# a tile is hot when it holds >= 1% of the images and >= 1000 of them
+HOT_TILE_RATIO = 0.01
+HOT_TILE_MIN_ROWS = 1000
+
 ANTARCTICA_RING = (
     (-63.1, -72.9, -71.9, -74.9, -74.3, -77.5, -77.4, -71.7, -65.9,
      -65.7, -66.6, -66.9, -69.8, -70.0, -71.0, -77.3, -77.9, -74.7),
@@ -57,7 +62,9 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
                   stage_root: str = None,
                   fingerprint: str = "") -> dict:
     """Run the flagship pipeline; returns dict of result DataFrames
-    plus "hot_tiles", the list of salted tiles.
+    plus "hot_tiles", the sorted list of hot tiles (HOT_TILE_RATIO,
+    HOT_TILE_MIN_ROWS).  Only a staged run knows them; unstaged it is
+    None, and a caller that wants them filters "tile_stats".
 
     With stage_root set, stages snapshot + resume via lineage, and a
     resume of a complete root runs no Spark job.
@@ -107,29 +114,36 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
     # (dedup.phash_clusters).  Snapshotted, so a resume skips it.
     dedup_split = _stage("dedup_split", lambda: ded.corpus_split(tiles))
 
-    # 6. hot-tile detection + salting (explicit skew handling), then
-    # per-tile aggregates through the salted key (two-phase: partial
-    # on salted key, final on true tile).  The hot tiles are found
-    # only when this stage builds and are committed with it, so a
-    # resume reads them from the commit and runs no job.
+    # 6. per-tile aggregates: one groupBy.  Spark plans countDistinct
+    # as a shuffle on (tile_id, phash) and then a merge of one partial
+    # row per tile per task, so a hot tile's rows never meet in one
+    # task and no hand salt is needed.  A staged build observes the
+    # hot tiles while it writes the aggregate and commits them with
+    # it, so a resume reads them from the commit and runs no job.
     hot = {"hot_tiles": None}
 
     def _tile_stats():
-        hot["hot_tiles"] = tiling.detect_hot_keys(
-            tiles, "tile_id", threshold_ratio=0.01, min_rows=1000)
-        # the salt is a function of phash, so each phash lands in ONE
-        # salt bucket and the per-bucket approx distinct counts add up
-        salted = tiling.salt_hot_keys(tiles, "tile_id", hot["hot_tiles"],
-                                      row_cols=["phash"])
-        partial = (salted.groupBy("salted_key")
-                   .agg(F.count("*").alias("_n"),
-                        F.approx_count_distinct("phash").alias("_d"),
-                        F.first("tile_id").alias("tile_id")))
-        return (partial.groupBy("tile_id")
-                .agg(F.sum("_n").alias("n_images"),
-                     F.sum("_d").alias("approx_distinct_phash")))
+        stats = tiles.groupBy("tile_id").agg(
+            F.count("*").alias("n_images"),
+            F.countDistinct("phash").alias("n_distinct_phash"))
+        if stage_root is None:
+            return stats
+        obs = Observation()
+        n = F.col("n_images")
+        hot["hot_tiles"] = lambda: _hot_tiles(obs.get)
+        return stats.observe(
+            obs, F.sum(n).alias("n"),
+            F.collect_list(F.when(n >= HOT_TILE_MIN_ROWS, F.struct(
+                "tile_id", n))).alias("cand"))
     tile_stats = _stage("tile_stats", _tile_stats, extra=hot)
 
     return {"tiles": tiles, "nearest": near, "in_polygon": in_poly,
             "invariants": invariants, "dedup_split": dedup_split,
             "tile_stats": tile_stats, "hot_tiles": hot["hot_tiles"]}
+
+
+def _hot_tiles(seen: dict) -> list:
+    """Tiles holding >= HOT_TILE_RATIO of all images (and at least
+    HOT_TILE_MIN_ROWS), from the observed total and candidates."""
+    thresh = max(int((seen["n"] or 0) * HOT_TILE_RATIO), HOT_TILE_MIN_ROWS)
+    return sorted(t for t, n in seen["cand"] if n >= thresh)

@@ -1054,26 +1054,6 @@ def ellip_route_crossings(spark, sf_dir):
             .orderBy("c_custkey", "seg"))
 
 
-def tile_counts_salted(spark, sf_dir):
-    """tile_counts through the explicit skew machinery: hot tiles
-    detected by the scout pass, salted with the deterministic
-    pmod(xxhash64) salt, aggregated partial-on-salted-key then
-    final-on-true-key.  The oracle is the PLAIN group-by — the driver
-    hash check proves the two-phase salted aggregation is exactly
-    count-preserving."""
-    pts = _customer_points(spark, sf_dir)
-    t = tiling.assign_tiles(pts, 3)
-    hot = tiling.detect_hot_keys(t, "tile_id", threshold_ratio=0.01,
-                                 min_rows=10)
-    salted = tiling.salt_hot_keys(t, "tile_id", hot, salt_factor=8,
-                                  row_cols=["c_custkey"])
-    partial = (salted.groupBy("tile_id", "salted_key")
-               .agg(F.count("*").alias("_n")))
-    return (partial.groupBy("tile_id")
-            .agg(F.sum("_n").cast("long").alias("n"))
-            .orderBy("tile_id"))
-
-
 def raster_coverage(spark, sf_dir):
     """Raster->vector assignment (north rule): 16x16 gnomonic-plane
     raster patches around anchor points, pixel centers un-projected
@@ -3671,9 +3651,6 @@ ORACLE_SQL["doc_bpe_tokens"] = """
          - len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_marks
     FROM documents ORDER BY doc_id
 """
-
-# the salted two-phase aggregation must equal the plain group-by
-ORACLE_SQL["tile_counts_salted"] = ORACLE_SQL["tile_counts"]
 
 # route proximity: closed-form sphere cross-track geometry with the
 # driver-side frame constants inlined (operators/route.py)

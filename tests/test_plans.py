@@ -100,6 +100,8 @@ def _jobs_in_group(spark, group, fn):
         fn()
     finally:
         sc.setJobGroup(None, None)
+    # the status store is fed by the listener bus: let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty(5000)
     return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -699,11 +701,11 @@ def test_cms_estimate_broadcasts_registers(spark):
 
 
 def test_aqe_splits_skewed_join_at_runtime(spark):
-    """Runtime complement to the engine's STATIC skew handling (hot
-    tiles counted then salted: queries.tile_counts_salted,
-    plans/pipeline.py hot-tile detection).  A skewed key the static
-    path has not pre-salted must be split by AQE's skew-join at
-    runtime — session.build_session ships
+    """Runtime complement to the engine's STATIC skew handling (the
+    salted (tile, salt) Window of queries.image_tile_rebalance; an
+    aggregate needs no salt, its partial aggregation folds a hot key
+    per map task).  A skewed join key must be split by AQE's
+    skew-join at runtime — session.build_session ships
     spark.sql.adaptive.skewJoin.enabled=true for exactly this.  The
     gate executes a deliberately skewed sort-merge join (one key
     carrying ~all rows) under tightened skew thresholds and asserts
@@ -752,28 +754,28 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
 
 
 def test_tile_stats_exact_on_salted_hot_tile(spark):
-    """A hot tile is salted before the per-tile aggregate; each phash
-    must land in one salt bucket, so n_images is exact and the summed
-    per-bucket approx_count_distinct stays within HLL error of the
-    true distinct count (a row-id salt counted a phash once per
-    bucket it landed in)."""
+    """All images on one point make one hot tile.  tile_stats is one
+    groupBy, and Spark spreads its countDistinct over (tile_id, phash)
+    before the per-tile merge (the salt a hand-written two-phase
+    aggregate would add), so both counts are exact.  Unstaged, the hot
+    tiles are not observed: hot_tiles is None."""
     from geographiclib_go_spark.plans import pipeline
     from geographiclib_go_spark.sources import images as im
 
     imgs = (im.generate_images(spark, 2000)
             .withColumn("lat", F.lit(12.5)).withColumn("lon", F.lit(45.5)))
     out = pipeline.tile_and_join(spark, imgs)
-    assert len(out["hot_tiles"]) == 1
+    assert out["hot_tiles"] is None
     rows = out["tile_stats"].collect()
     want = imgs.agg(F.countDistinct("phash")).collect()[0][0]
     assert len(rows) == 1 and rows[0]["n_images"] == 2000
     assert want < 2000  # repeated phashes on the hot tile
-    assert abs(rows[0]["approx_distinct_phash"] - want) <= 0.15 * want
+    assert rows[0]["n_distinct_phash"] == want
 
 
 def _hot_tile_images(spark, n=2000):
     """generate_images with ~60% of its rows (picked by an id hash)
-    moved onto one point, so the pipeline salts exactly one hot
+    moved onto one point, so the pipeline finds exactly one hot
     tile."""
     from geographiclib_go_spark.sources import images as im
     on_hot = F.pmod(F.xxhash64("image_id"), F.lit(5)) < 3
@@ -787,10 +789,11 @@ STAGES = ("tiles", "nearest_landmark", "pip", "invariants", "dedup_split",
 
 
 def test_staged_build_job_counts_and_resume_runs_none(spark):
-    """A staged tile_and_join build runs at most 11 Spark jobs (pip 1,
-    dedup_split at most 2, every job inside a stage commit), and a
-    resume of the complete root runs none: the hot tiles come back
-    from the tile_stats commit."""
+    """A staged tile_and_join build runs at most 9 Spark jobs (pip 1,
+    dedup_split at most 2, tile_stats at most 3: its two exchanges and
+    the write, with the hot tiles observed during the write; every job
+    inside a stage commit), and a resume of the complete root runs
+    none: the hot tiles come back from the tile_stats commit."""
     from geographiclib_go_spark.plans import pipeline
     imgs = _hot_tile_images(spark)
     with tempfile.TemporaryDirectory() as root:
@@ -802,10 +805,11 @@ def test_staged_build_job_counts_and_resume_runs_none(spark):
         built = _jobs_in_group(spark, "staged-build", lambda: run("build"))
         commits = {s: lineage.current_snapshot(root, s) for s in STAGES}
         per_stage = {s: c["jobs"] for s, c in commits.items()}
-        assert len(built) <= 11, per_stage
+        assert len(built) <= 9, per_stage
         assert sum(per_stage.values()) == len(built), per_stage
         assert per_stage["pip"] == 1, per_stage
         assert per_stage["dedup_split"] <= 2, per_stage
+        assert per_stage["tile_stats"] <= 3, per_stage
         assert len(out["build"]["hot_tiles"]) == 1
         assert commits["tile_stats"]["hot_tiles"] == out["build"]["hot_tiles"]
 
@@ -815,6 +819,35 @@ def test_staged_build_job_counts_and_resume_runs_none(spark):
         assert out["resume"]["hot_tiles"] == out["build"]["hot_tiles"]
         for s in STAGES:
             assert lineage.current_snapshot(root, s)["version"] == 1, s
+
+
+def test_unstaged_jobs_all_come_from_dedup_split(spark, monkeypatch):
+    """Unstaged, tile_and_join runs only the jobs of building
+    dedup_split (its connected components checkpoint eagerly): the
+    tile_stats frame is built without running a job, and the hot
+    tiles are not looked for."""
+    from geographiclib_go_spark.plans import pipeline
+    sc = spark.sparkContext
+    tag = "unstaged-dedup-split"
+    corpus_split = pipeline.ded.corpus_split
+
+    def tagged(df):
+        sc.addJobTag(tag)
+        try:
+            return corpus_split(df)
+        finally:
+            sc.removeJobTag(tag)
+    monkeypatch.setattr(pipeline.ded, "corpus_split", tagged)
+    imgs = _hot_tile_images(spark)
+    out = {}
+
+    def run():
+        out.update(pipeline.tile_and_join(spark, imgs))
+    jobs = _jobs_in_group(spark, "unstaged-tile-and-join", run)
+    dedup_jobs = list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+    assert len(jobs) <= 5, jobs
+    assert sorted(jobs) == sorted(dedup_jobs), (jobs, dedup_jobs)
+    assert out["hot_tiles"] is None
 
 
 def test_tile_stats_commit_without_hot_tiles_rebuilds(spark):

@@ -163,51 +163,6 @@ def test_tile_assignment_deterministic(spark, points_df):
     assert t1.exceptAll(t2).isEmpty() and t2.exceptAll(t1).isEmpty()
 
 
-def test_salting_spreads_hot_keys(spark):
-    pdf = pd.DataFrame({"k": [1] * 5000 + list(range(2, 1000)),
-                        "v": 1.0})
-    df = spark.createDataFrame(pdf)
-    hot = tiling.detect_hot_keys(df, "k", threshold_ratio=0.01,
-                                 min_rows=100)
-    assert hot == [1]
-    # key 2 (300 rows) clears min_rows but not 1% of 60,000 rows:
-    # total * threshold_ratio, not min_rows, sets the threshold
-    ids = F.col("id")
-    df_r = spark.range(60_000).select(
-        F.when(ids < 1000, 1).when(ids < 1300, 2).otherwise(ids)
-        .alias("k"))
-    assert tiling.detect_hot_keys(df_r, "k", threshold_ratio=0.01,
-                                  min_rows=100) == [1]
-    salted = tiling.salt_hot_keys(df, "k", hot, salt_factor=8)
-    n_salted = (salted.filter(F.col("k") == 1)
-                .select("salted_key").distinct().count())
-    assert n_salted == 8
-    # non-hot keys unchanged
-    assert (salted.filter(F.col("k") == 5)
-            .select("salted_key").distinct().count()) == 1
-    # the salt is deterministic: rerunning the stage yields the
-    # identical salted-key histogram (retry-idempotent lineage)
-    def hist(sdf):
-        return sorted(map(tuple, sdf.groupBy("salted_key").count()
-                          .collect()))
-    assert hist(salted) == hist(
-        tiling.salt_hot_keys(df, "k", hot, salt_factor=8))
-    # content-keyed variant spreads distinct rows and is stable
-    # under repartitioning too
-    pdf2 = pd.DataFrame({"k": [1] * 5000 + list(range(2, 1000)),
-                         "v": np.arange(5998, dtype=float)})
-    df2 = spark.createDataFrame(pdf2)
-    s2 = tiling.salt_hot_keys(df2, "k", hot, salt_factor=8,
-                              row_cols=["k", "v"])
-    assert (s2.filter(F.col("k") == 1)
-            .select("salted_key").distinct().count()) == 8
-    s2r = tiling.salt_hot_keys(df2.repartition(7), "k", hot,
-                               salt_factor=8, row_cols=["k", "v"])
-    a = sorted(map(tuple, s2.select("v", "salted_key").collect()))
-    b = sorted(map(tuple, s2r.select("v", "salted_key").collect()))
-    assert a == b
-
-
 def test_images_source_invariants(spark):
     df = im.generate_images(spark, 500, skew_pct=5).cache()
     rows = df.collect()

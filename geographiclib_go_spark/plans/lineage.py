@@ -218,6 +218,9 @@ def _commit_meta(stage: str, input_fingerprint: str, t0: float,
         "checksum": checksum or 0,
         "schema": schema,
         "files": files,
+        # epoch start beside the wall: a build's commits give its
+        # timeline (which stages overlapped, the critical path)
+        "started_at": round(t0, 3),
         "wall_s": round(time.time() - t0, 3),
         "input_fingerprint": input_fingerprint,
         "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -245,7 +248,10 @@ def run_stage(spark: SparkSession, root: str, stage: str,
     in its own staging dir, the version-slot rename makes exactly one
     writer own each version number (losers retry with the next), and
     the pointer swap is last-writer-wins between two complete
-    snapshots.
+    snapshots.  DIFFERENT stages committed at once from threads of one
+    session are the normal mode (plans.pipeline.tile_and_join builds
+    independent stages concurrently): each call has its own staging
+    dir, Observation and job tag.
 
     `extra` carries commit fields beyond the lineage: build() fills
     its values, and they are committed with the snapshot; a resume

@@ -6,6 +6,9 @@ import json
 import os
 import shutil
 import tempfile
+import threading
+import time
+import warnings
 
 import pytest
 
@@ -115,9 +118,15 @@ def test_stage_commit_is_one_job_resume_is_none(spark):
                 spark, root, "s", lambda: spark.range(0, 1000, 1, 4),
                 input_fingerprint="fp1")
 
+        t0 = time.time()
         built = _jobs_in_group(spark, "commit-one-job-build", run)
+        t1 = time.time()
         assert len(built) == 1, built
-        assert lineage.current_snapshot(root, "s")["jobs"] == 1
+        cur = lineage.current_snapshot(root, "s")
+        assert cur["jobs"] == 1
+        # the start beside the wall (rounded to ms) lies inside the call
+        assert t0 - 0.001 <= cur["started_at"] <= t1
+        assert cur["started_at"] + cur["wall_s"] <= t1 + 0.002
         resumed = _jobs_in_group(spark, "commit-one-job-resume", run)
         assert resumed == [], resumed
         assert len(lineage.snapshot_history(root, "s")) == 1
@@ -788,13 +797,20 @@ STAGES = ("tiles", "nearest_landmark", "pip", "invariants", "dedup_split",
           "tile_stats")
 
 
+TILES_READERS = ("dedup_split", "tile_stats", "nearest_landmark", "pip")
+
+
 def test_staged_build_job_counts_and_resume_runs_none(spark):
     """A staged tile_and_join build runs at most 9 Spark jobs (pip 1,
     dedup_split at most 2, tile_stats at most 3: its two exchanges and
     the write, with the hot tiles observed during the write; every job
     inside a stage commit), and a resume of the complete root runs
-    none: the hot tiles come back from the tile_stats commit."""
+    none: the hot tiles come back from the tile_stats commit.  The
+    stages run in threads of their own, which carry the caller's job
+    group and job tags (no "Tags will not be inherited" warning), and
+    a stage that reads tiles starts only after tiles committed."""
     from geographiclib_go_spark.plans import pipeline
+    sc = spark.sparkContext
     imgs = _hot_tile_images(spark)
     with tempfile.TemporaryDirectory() as root:
         out = {}
@@ -802,11 +818,27 @@ def test_staged_build_job_counts_and_resume_runs_none(spark):
         def run(key):
             out[key] = pipeline.tile_and_join(spark, imgs, stage_root=root,
                                               fingerprint="fp")
-        built = _jobs_in_group(spark, "staged-build", lambda: run("build"))
+        tag = "staged-build-caller"
+        sc.addJobTag(tag)
+        try:
+            with warnings.catch_warnings():
+                warnings.filterwarnings(
+                    "error", message=".*Tags will not be inherited")
+                built = _jobs_in_group(spark, "staged-build",
+                                       lambda: run("build"))
+        finally:
+            sc.removeJobTag(tag)
+        tagged = sc._jsc.sc().statusTracker().getJobIdsForTag(tag)
+        assert sorted(tagged) == sorted(built), (tagged, built)
         commits = {s: lineage.current_snapshot(root, s) for s in STAGES}
         per_stage = {s: c["jobs"] for s, c in commits.items()}
         assert len(built) <= 9, per_stage
         assert sum(per_stage.values()) == len(built), per_stage
+        tiles = commits["tiles"]
+        for s in TILES_READERS:
+            # started_at and wall_s are each rounded to 1 ms
+            assert (commits[s]["started_at"]
+                    >= tiles["started_at"] + tiles["wall_s"] - 0.002), s
         assert per_stage["pip"] == 1, per_stage
         assert per_stage["dedup_split"] <= 2, per_stage
         assert per_stage["tile_stats"] <= 3, per_stage
@@ -819,6 +851,88 @@ def test_staged_build_job_counts_and_resume_runs_none(spark):
         assert out["resume"]["hot_tiles"] == out["build"]["hot_tiles"]
         for s in STAGES:
             assert lineage.current_snapshot(root, s)["version"] == 1, s
+
+
+def _wait_at(barrier, fn):
+    """`fn`, returning its frame only once `barrier.parties` callers
+    are waiting (BrokenBarrierError after the barrier's timeout)."""
+    def wrapped(*args, **kw):
+        out = fn(*args, **kw)
+        barrier.wait()
+        return out
+    return wrapped
+
+
+def test_staged_build_runs_independent_stages_together(spark, monkeypatch):
+    """tiles and invariants are built at the same time, and so are
+    the stages that read tiles: each build waits on a barrier that
+    only the other stages of its level can release, so a build that
+    ran the stages one after another would break the barrier."""
+    from geographiclib_go_spark.plans import pipeline
+    sources = threading.Barrier(2, timeout=60)
+    readers = threading.Barrier(3, timeout=60)
+    for mod, name, barrier in (
+            (pipeline.tiling, "assign_tiles", sources),
+            (pipeline.im, "decode_invariants", sources),
+            (pipeline.ded, "corpus_split", readers),
+            (pipeline.nearest, "nearest_dim_join", readers),
+            (pipeline.sj, "pip_join", readers)):
+        monkeypatch.setattr(mod, name, _wait_at(barrier, getattr(mod, name)))
+    with tempfile.TemporaryDirectory() as root:
+        pipeline.tile_and_join(spark, _hot_tile_images(spark),
+                               stage_root=root, fingerprint="fp")
+        for s in STAGES:
+            assert lineage.current_snapshot(root, s)["version"] == 1, s
+    assert not sources.broken and not readers.broken
+
+
+def test_failing_stage_waits_for_the_others_and_resumes(spark, monkeypatch):
+    """A stage that raises in the middle of a staged build: the error
+    reaches the caller only after every other started stage returned,
+    no job or stage thread outlives the call, the stages that
+    committed hold complete snapshots, and a rerun without the fault
+    builds only the failed stage."""
+    from geographiclib_go_spark.plans import pipeline
+    sc = spark.sparkContext
+    imgs = _hot_tile_images(spark)
+    run_stage = pipeline.lineage.run_stage
+    returned = []
+
+    def recording(spark_, root_, stage, *args, **kw):
+        out = run_stage(spark_, root_, stage, *args, **kw)
+        returned.append(stage)
+        return out
+
+    def pip_fault(*args, **kw):
+        raise RuntimeError("injected pip fault")
+
+    monkeypatch.setattr(pipeline.lineage, "run_stage", recording)
+    threads = set(threading.enumerate())
+    with tempfile.TemporaryDirectory() as root:
+        with monkeypatch.context() as fault:
+            fault.setattr(pipeline.sj, "pip_join", pip_fault)
+            with pytest.raises(RuntimeError, match="injected pip fault"):
+                pipeline.tile_and_join(spark, imgs, stage_root=root,
+                                       fingerprint="fp")
+            others = sorted(s for s in STAGES if s != "pip")
+            assert sorted(returned) == others, returned
+            assert not [t for t in set(threading.enumerate()) - threads
+                        if t.name.startswith("ThreadPoolExecutor")
+                        and t.is_alive()]
+            sc._jsc.sc().listenerBus().waitUntilEmpty(5000)
+            assert list(sc.statusTracker().getActiveJobsIds()) == []
+        assert lineage.current_snapshot(root, "pip") is None
+        for s in others:
+            assert lineage.stage_is_complete(root, s, "fp"), s
+            assert lineage.verify_stage(spark, root, s), s
+
+        returned.clear()
+        out = pipeline.tile_and_join(spark, imgs, stage_root=root,
+                                     fingerprint="fp")
+        for s in STAGES:
+            assert lineage.current_snapshot(root, s)["version"] == 1, s
+        assert lineage.verify_stage(spark, root, "pip")
+        assert len(out["hot_tiles"]) == 1
 
 
 def test_unstaged_jobs_all_come_from_dedup_split(spark, monkeypatch):

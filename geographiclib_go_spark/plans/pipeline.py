@@ -173,26 +173,24 @@ def tile_and_join(spark: SparkSession, images: DataFrame,
     else:
         # 7. each stage is submitted once its input is committed; the
         # `with` waits for every started stage, also when one raises
-        built, names = {}, {}
+        built = {}
         with ThreadPoolExecutor(max_workers=STAGE_THREADS) as pool:
-            def submit(name, build):
+            def submit(stages: dict) -> dict:
                 # wrapped per stage, in this thread: each stage thread
                 # gets its own copy of the caller's local properties
                 # (job group, job tags), so run_stage's per-call tag
                 # stays in its own thread
-                run = pyspark.inheritable_thread_target(spark)(_stage)
-                fut = pool.submit(run, name, build)
-                names[fut] = name
-                return fut
-            running = {submit(n, b) for n, b in sources.items()}
+                inherit = pyspark.inheritable_thread_target
+                return {pool.submit(inherit(spark)(_stage), name, b): name
+                        for name, b in stages.items()}
+            running = submit(sources)
             while running:
-                done, running = wait(running, return_when=FIRST_COMPLETED)
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
                 for fut in done:
-                    name = names[fut]
+                    name = running.pop(fut)
                     built[name] = fut.result()
                     if name == "tiles":
-                        running |= {submit(n, b) for n, b in
-                                    _readers(built[name]).items()}
+                        running.update(submit(_readers(built[name])))
 
     return {"tiles": built["tiles"], "nearest": built["nearest_landmark"],
             "in_polygon": built["pip"], "invariants": built["invariants"],
